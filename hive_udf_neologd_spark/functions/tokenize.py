@@ -73,6 +73,21 @@ def _resolve_user_dict(user_dict) -> tuple | None:
     )
 
 
+def _config_key(mode, stop_words, stop_tags, user_dict) -> tuple:
+    """Validate a factory's config on the driver and freeze it into the
+    worker-side engine cache key (O10) — the errors ``tokenize_ja`` lists."""
+    parsed_mode = Mode.parse(mode)  # O3: validate now
+    frozen_stop_words = tuple(stop_words) if stop_words is not None else None
+    frozen_stop_tags = tuple(stop_tags) if stop_tags is not None else None
+    frozen_user = _resolve_user_dict(user_dict)  # O6/O7: fetch/parse-check now
+    if frozen_user is not None:
+        # Validate CSV now so malformed dicts fail on the driver.
+        from hive_udf_neologd_spark.tokenizer.dictionary import UserDictionary
+
+        UserDictionary.from_rows(list(frozen_user))
+    return (parsed_mode.value, frozen_stop_words, frozen_stop_tags, frozen_user)
+
+
 def tokenize_ja(
     mode: str | None = None,
     stop_words: list[str] | None = None,
@@ -87,17 +102,7 @@ def tokenize_ja(
     ``UDFArgumentException``), ``TypeError`` on a bad user_dict type, and
     ``UserDictionaryError`` on URL/CSV failures.
     """
-    parsed_mode = Mode.parse(mode)  # O3: validate now
-    frozen_stop_words = tuple(stop_words) if stop_words is not None else None
-    frozen_stop_tags = tuple(stop_tags) if stop_tags is not None else None
-    frozen_user = _resolve_user_dict(user_dict)  # O6/O7: fetch/parse-check now
-    if frozen_user is not None:
-        # Validate CSV now so malformed dicts fail on the driver.
-        from hive_udf_neologd_spark.tokenizer.dictionary import UserDictionary
-
-        UserDictionary.from_rows(list(frozen_user))
-
-    key = (parsed_mode.value, frozen_stop_words, frozen_stop_tags, frozen_user)
+    key = _config_key(mode, stop_words, stop_tags, user_dict)
 
     @pandas_udf(ArrayType(StringType()))
     def _tokenize(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -126,16 +131,7 @@ def tokenize_ja_rich(
     pipeline builds one engine)."""
     from pyspark.sql.types import BooleanType, StructField, StructType
 
-    parsed_mode = Mode.parse(mode)
-    frozen_stop_words = tuple(stop_words) if stop_words is not None else None
-    frozen_stop_tags = tuple(stop_tags) if stop_tags is not None else None
-    frozen_user = _resolve_user_dict(user_dict)
-    if frozen_user is not None:
-        from hive_udf_neologd_spark.tokenizer.dictionary import UserDictionary
-
-        UserDictionary.from_rows(list(frozen_user))
-
-    key = (parsed_mode.value, frozen_stop_words, frozen_stop_tags, frozen_user)
+    key = _config_key(mode, stop_words, stop_tags, user_dict)
     schema = ArrayType(
         StructType(
             [

@@ -29,9 +29,11 @@ from hive_udf_neologd_spark.sources import read_table
 def u01_applyinpandas_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment customer ranking as a GROUPED-MAP pandas UDF: each
     market segment arrives as one pandas DataFrame, the kernel sorts by
-    (acctbal desc, custkey asc) and emits integer rank + rank/n rounded —
-    integer arithmetic, so the window-function oracle matches exactly.
-    Top-3 per segment keeps the output small."""
+    (acctbal desc, custkey asc) and emits the integer rank and the segment
+    size — integer arithmetic, so the window-function oracle matches
+    exactly.  rank/n is rounded on the JVM: SQL ``ROUND`` rounds a tie
+    half away from zero (3/800 → 0.0038), where Python's ``round`` on the
+    double gives 0.0037.  Top-3 per segment keeps the output small."""
     prepare(spark)
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
@@ -43,14 +45,21 @@ def u01_applyinpandas_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).reset_index(drop=True)
         n = len(pdf)
         pdf["rnk"] = range(1, n + 1)
-        pdf["pct"] = [round(r / n, 4) for r in range(1, n + 1)]
+        pdf["n"] = n
         return pdf[pdf["rnk"] <= 3]
 
     return (
         cust.groupBy("c_mktsegment")
         .applyInPandas(
             _rank,
-            "c_custkey long, c_mktsegment string, c_acctbal double, rnk int, pct double",
+            "c_custkey long, c_mktsegment string, c_acctbal double, rnk int, n long",
+        )
+        .select(
+            "c_custkey",
+            "c_mktsegment",
+            "c_acctbal",
+            "rnk",
+            F.round(F.col("rnk") / F.col("n"), 4).alias("pct"),
         )
         .orderBy("c_mktsegment", "rnk")
     )

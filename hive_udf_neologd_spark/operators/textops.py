@@ -29,6 +29,21 @@ from pyspark.sql import functions as F
 from hive_udf_neologd_spark.functions.tokenize import tokenize_ja
 from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import local_frame, read_table
+from hive_udf_neologd_spark.tokenizer import (
+    lemma_parity,
+    mode_parity,
+    pos_parity,
+    reading_parity,
+    userdict_parity,
+)
+from hive_udf_neologd_spark.tokenizer.axis import Axis, values_sql
+from hive_udf_neologd_spark.tokenizer.goldens import (
+    T18_POOL,
+    T18_TOKENS,
+    T23_TOKENS,
+    T24_TOKENS,
+    values_rows,
+)
 
 
 def ensure_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -1049,60 +1064,62 @@ FROM per_doc GROUP BY lang ORDER BY lang
 """
 
 
-# --- t18: Japanese tokenizer throughput over the full corpus ---------------
-def t18_ja_tokenize_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dictionary-scale throughput gate (judge r4 next-round #1): every
-    document in the sf corpus is mapped to one of 8 pinned Japanese texts
+# --- t18/t23/t24: Japanese tokenizer throughput, one row per mode --------
+def _throughput_query(mode: str):
+    """Dictionary-scale throughput gate for one tokenizer mode: t18
+    NORMAL (judge r4 next-round #1), t23 SEARCH, whose compound-as-synonym
+    emission re-scans ``prefix_matches`` per chosen node (VERDICT r6
+    next-round #5), and t24 EXTENDED, which also unigrams unknown runs —
+    the highest-token-count path through the lattice.  Every document in
+    the sf corpus is mapped to one of 8 pinned Japanese texts
     (``doc_id % 8``) and run through the FULL lattice — Japanese text
     disables the ASCII fast path, so this times the Viterbi engine against
     the generated MeCab snapshot (20k+ entries) at corpus volume.  The
     bench row divides n_docs by wall time for docs/sec; dictionary growth
-    that regresses the hot kernel now fails a BASELINE gate instead of
+    that regresses the hot kernel fails a BASELINE gate instead of
     slipping through (t01's corpus is pure-ASCII and never touches the
     lattice).
 
-    Correctness: the oracle joins per-pid corpus counts (DuckDB-computable)
-    with the pinned token sequences from tokenizer/goldens.py — token
-    values, per-doc counts, and corpus totals are all hash-checked at any
-    sf.
+    Correctness: the oracle (``_throughput_sql``) joins per-pid corpus
+    counts (DuckDB-computable) with the mode's pinned token sequences from
+    tokenizer/goldens.py — token values, per-doc counts, and corpus totals
+    are all hash-checked at any sf.
 
     Scale: one narrow ArrowEvalPython projection + a tiny 8-group
     aggregate with map-side partials; no corpus-sized shuffle."""
-    prepare(spark)
-    from hive_udf_neologd_spark.functions.tokenize import tokenize_ja
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL
 
-    docs = read_table(spark, sf_dir, "documents")
-    # Single-file sf fixture → one input split → spread the CPU-bound
-    # tokenizer; a production scan with enough splits passes through with
-    # no shuffle (see ensure_parallelism).
-    docs = ensure_parallelism(spark, docs)
-    tok = tokenize_ja()
-    pool = F.array(*[F.lit(s) for s in T18_POOL])
-    toks = docs.select(
-        (F.col("doc_id") % len(T18_POOL)).alias("pid"),
-        tok(F.element_at(pool, (F.col("doc_id") % len(T18_POOL)).cast("int") + 1)).alias(
-            "toks"
-        ),
-    )
-    return (
-        toks.groupBy("pid")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.first(F.concat_ws("|", "toks")).alias("tokens_str"),
-            F.first(F.size("toks")).alias("n_tokens_per_doc"),
-            F.sum(F.size("toks")).alias("total_tokens"),
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        prepare(spark)
+        docs = read_table(spark, sf_dir, "documents")
+        # Single-file sf fixture → one input split → spread the CPU-bound
+        # tokenizer; a production scan with enough splits passes through
+        # with no shuffle (see ensure_parallelism).
+        docs = ensure_parallelism(spark, docs)
+        tok = tokenize_ja(mode=mode)
+        pool = F.array(*[F.lit(s) for s in T18_POOL])
+        pid = F.col("doc_id") % len(T18_POOL)
+        toks = docs.select(
+            pid.alias("pid"),
+            tok(F.element_at(pool, pid.cast("int") + 1)).alias("toks"),
         )
-        .orderBy("pid")
-    )
+        return (
+            toks.groupBy("pid")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.first(F.concat_ws("|", "toks")).alias("tokens_str"),
+                F.first(F.size("toks")).alias("n_tokens_per_doc"),
+                F.sum(F.size("toks")).alias("total_tokens"),
+            )
+            .orderBy("pid")
+        )
+
+    return build
 
 
-def _t18_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL, t18_values_rows
-
+def _throughput_sql(tokens_by_pid: dict[int, tuple[str, ...]]) -> str:
     return f"""
 WITH pool(pid, tokens_str, n_tokens_per_doc) AS (VALUES
-{t18_values_rows()}
+{values_rows(tokens_by_pid)}
 ),
 d AS (SELECT doc_id % {len(T18_POOL)} AS pid FROM documents)
 SELECT p.pid, COUNT(*) AS n_docs, ANY_VALUE(p.tokens_str) AS tokens_str,
@@ -1113,7 +1130,7 @@ GROUP BY p.pid ORDER BY p.pid
 """
 
 
-T18_SQL = _t18_sql()
+T18_SQL = _throughput_sql(T18_TOKENS)
 
 
 # --- t19: the composed training-data pipeline, end-to-end ------------------
@@ -1413,187 +1430,83 @@ T22_SQL = __import__(
 ).t22_values_sql()
 
 
-def t23_ja_search_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SEARCH-mode throughput gate (VERDICT r6 next-round #5): t18's twin
-    with ``mode="search"`` — the one tokenizer path that re-scans
-    ``prefix_matches`` per chosen node for compound-as-synonym emission
-    (lattice.py) had no throughput row, so its cost at corpus scale was
-    ungated.  Same shape as t18: one narrow ArrowEvalPython projection +
-    an 8-group map-side aggregate; oracle replays the pinned SEARCH
-    goldens (tokenizer/goldens.py T23_TOKENS) joined with DuckDB-computed
-    per-pid corpus counts."""
-    prepare(spark)
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL
+def _parity_query(axis: Axis):
+    """EXTERNAL exact-match parity metric for one held-out axis
+    (tokenizer/axis.py): t25 modes (VERDICT r8 next-round #1), t27
+    lemmas, t28 readings, t29 user dictionaries and t30 POS strings.  Each
+    sentence's expected token sequence — hand-derived and committed before
+    measurement (see the axis module for its derivation sources and
+    current counts) — is compared with the engine's by EXACT match, stricter
+    than t22's span F1 because SEARCH's compound-as-synonym emission is an
+    ORDER contract (Lucene 5.5.5 Mode.SEARCH javadoc; reference
+    KuromojiNEologdUDF.java:171-192 pins the mode surface, 306-316 drains
+    every emitted term).
 
-    docs = read_table(spark, sf_dir, "documents")
-    docs = ensure_parallelism(spark, docs)
-    tok = tokenize_ja(mode="search")
-    pool = F.array(*[F.lit(s) for s in T18_POOL])
-    toks = docs.select(
-        (F.col("doc_id") % len(T18_POOL)).alias("pid"),
-        tok(
-            F.element_at(pool, (F.col("doc_id") % len(T18_POOL)).cast("int") + 1)
-        ).alias("toks"),
-    )
-    return (
-        toks.groupBy("pid")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.first(F.concat_ws("|", "toks")).alias("tokens_str"),
-            F.first(F.size("toks")).alias("n_tokens_per_doc"),
-            F.sum(F.size("toks")).alias("total_tokens"),
+    Shape: a constant-size LocalTableScan frame through one narrow
+    iterator-form pandas UDF and a per-register rollup — constant at any
+    cluster scale (t22's 100 TB argument: broadcast corpus vs sampled
+    engine output, same plan).  The UDF closure carries only the axis
+    module's name; each worker imports the module and caches one engine
+    per config.  Oracle: ``values_sql(axis)`` replays the recorded
+    aggregates with the same IEEE acc expression — full hash check."""
+    module = axis.module
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        prepare(spark)
+        from pyspark.sql.functions import pandas_udf
+
+        df = local_frame(
+            spark,
+            [
+                (sid, register, list(config), text, list(expected))
+                for sid, register, config, text, expected in axis.corpus
+            ],
+            "sid long, register string, config array<string>, text string, "
+            "exp array<string>",
         )
-        .orderBy("pid")
-    )
 
+        @pandas_udf("matched boolean, n_pred long")
+        def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from importlib import import_module
 
-def _t23_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL, t23_values_rows
+            from hive_udf_neologd_spark.tokenizer.axis import predict
 
-    return f"""
-WITH pool(pid, tokens_str, n_tokens_per_doc) AS (VALUES
-{t23_values_rows()}
-),
-d AS (SELECT doc_id % {len(T18_POOL)} AS pid FROM documents)
-SELECT p.pid, COUNT(*) AS n_docs, ANY_VALUE(p.tokens_str) AS tokens_str,
-       ANY_VALUE(p.n_tokens_per_doc) AS n_tokens_per_doc,
-       CAST(COUNT(*) * ANY_VALUE(p.n_tokens_per_doc) AS BIGINT) AS total_tokens
-FROM d JOIN pool p USING (pid)
-GROUP BY p.pid ORDER BY p.pid
-"""
+            ax = import_module(module).AXIS
+            for frame in batches:
+                preds = [
+                    predict(ax, tuple(c), t)
+                    for c, t in zip(frame["config"], frame["text"])
+                ]
+                yield pd.DataFrame(
+                    {
+                        "matched": [
+                            p == list(e) for p, e in zip(preds, frame["exp"])
+                        ],
+                        "n_pred": [len(p) for p in preds],
+                    }
+                )
 
-
-T23_SQL = _t23_sql()
-
-
-def t24_ja_extended_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTENDED-mode throughput gate — completes the mode matrix (t18
-    NORMAL, t23 SEARCH, t24 EXTENDED): EXTENDED lowers decompound
-    thresholds and 1-grams unknown runs, the highest-token-count path
-    through the lattice.  Same shape and oracle pattern as t18/t23."""
-    prepare(spark)
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL
-
-    docs = read_table(spark, sf_dir, "documents")
-    docs = ensure_parallelism(spark, docs)
-    tok = tokenize_ja(mode="extended")
-    pool = F.array(*[F.lit(s) for s in T18_POOL])
-    toks = docs.select(
-        (F.col("doc_id") % len(T18_POOL)).alias("pid"),
-        tok(
-            F.element_at(pool, (F.col("doc_id") % len(T18_POOL)).cast("int") + 1)
-        ).alias("toks"),
-    )
-    return (
-        toks.groupBy("pid")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.first(F.concat_ws("|", "toks")).alias("tokens_str"),
-            F.first(F.size("toks")).alias("n_tokens_per_doc"),
-            F.sum(F.size("toks")).alias("total_tokens"),
+        per = df.select(
+            "register",
+            F.size("exp").alias("n_exp_row"),
+            _score(F.struct("config", "text", "exp")).alias("s"),
         )
-        .orderBy("pid")
-    )
-
-
-def _t24_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL, t24_values_rows
-
-    return f"""
-WITH pool(pid, tokens_str, n_tokens_per_doc) AS (VALUES
-{t24_values_rows()}
-),
-d AS (SELECT doc_id % {len(T18_POOL)} AS pid FROM documents)
-SELECT p.pid, COUNT(*) AS n_docs, ANY_VALUE(p.tokens_str) AS tokens_str,
-       ANY_VALUE(p.n_tokens_per_doc) AS n_tokens_per_doc,
-       CAST(COUNT(*) * ANY_VALUE(p.n_tokens_per_doc) AS BIGINT) AS total_tokens
-FROM d JOIN pool p USING (pid)
-GROUP BY p.pid ORDER BY p.pid
-"""
-
-
-T24_SQL = _t24_sql()
-
-
-def t25_mode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL mode-parity metric (VERDICT r8 next-round #1): the held-out
-    SEARCH/EXTENDED corpus (tokenizer/mode_parity.py — see that module
-    for the current sentence/register counts; expected emissions
-    hand-derived from the documented mode semantics and committed before
-    measurement) scored as per-sentence
-    EXACT token-sequence match — stricter than t22's span F1, because
-    SEARCH's compound-as-synonym emission is an ORDER contract (Lucene
-    5.5.5 Mode.SEARCH javadoc; reference KuromojiNEologdUDF.java:171-192
-    pins the mode surface, 306-316 drains every emitted term).
-
-    Shape: a constant-size frame through one narrow iterator-form
-    pandas UDF, per-register aggregate — constant at any cluster scale
-    (t22's 100 TB argument: broadcast corpus vs sampled engine output,
-    same plan).  Oracle replays the recorded aggregates (T25_EXPECTED,
-    recapture protocol) as a VALUES table with the same IEEE acc
-    expression — full hash check."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.mode_parity import MODE_PARITY_CORPUS
-
-    rows = [
-        (sid, register, mode, text, list(surfaces))
-        for sid, register, mode, text, surfaces in MODE_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark,
-        rows,
-        "sid long, register string, mode string, text string, exp array<string>",
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.mode_parity import predicted_surfaces
-
-        for frame in batches:
-            preds = [
-                predicted_surfaces(t, m)
-                for t, m in zip(frame["text"], frame["mode"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
+        # rollup grand total = __total__ (one ArrowEvalPython pass — see
+        # t22's plan-audit note).
+        return (
+            per.rollup("register")
+            .agg(
+                F.count(F.lit(1)).alias("n_sent"),
+                F.sum(F.col("s.matched").cast("long")).alias("n_match"),
+                F.sum("n_exp_row").alias("n_tok_exp"),
+                F.sum("s.n_pred").alias("n_tok_pred"),
             )
+            .withColumn("register", F.coalesce("register", F.lit("__total__")))
+            .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
+            .orderBy("register")
+        )
 
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("text", "mode", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    # rollup grand total = __total__ (one ArrowEvalPython pass — see
-    # t22's plan-audit note).
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t25_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.mode_parity import t25_values_sql
-
-    return t25_values_sql()
-
-
-T25_SQL = _t25_sql()
+    return build
 
 
 def t26_ja_rich_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1670,335 +1583,6 @@ GROUP BY p.pid ORDER BY p.pid
 T26_SQL = _t26_sql()
 
 
-def t27_lemma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL lemma-parity metric (round 9, third axis): the held-out
-    lemma corpus (tokenizer/lemma_parity.py — see that module for the
-    current sentence/register counts; expected OUTPUT TERMS of the full
-    default analyzer chain, hand-derived and committed before
-    measurement) scored by exact
-    term-sequence match.  Covers what t22's spans and t25's raw
-    emissions cannot see: base-form lemmatization (incl. the
-    same-surface noun/verb tie class audit 148 documented as
-    gate-blind), lemma-level stopword removal, width folding, katakana
-    stemming, lowercasing.  Same constant-frame shape and VALUES-oracle
-    pattern as t22/t25."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.lemma_parity import (
-        LEMMA_PARITY_CORPUS,
-    )
-
-    rows = [
-        (sid, register, text, list(terms))
-        for sid, register, text, terms in LEMMA_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark, rows, "sid long, register string, text string, exp array<string>"
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import (
-            predicted_terms,
-        )
-
-        for frame in batches:
-            preds = [predicted_terms(t) for t in frame["text"]]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
-            )
-
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("text", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    # rollup grand total = __total__ (one ArrowEvalPython pass — see
-    # t22's plan-audit note).
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t27_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.lemma_parity import t27_values_sql
-
-    return t27_values_sql()
-
-
-T27_SQL = _t27_sql()
-
-
-def t28_reading_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL reading-parity metric (round 10, fourth axis — VERDICT r9
-    next-round #4): the held-out reading corpus
-    (tokenizer/reading_parity.py — see that module for the current
-    sentence/register counts; expected (surface, reading) pairs of the
-    default-chain rich output, derived from public IPADIC reading facts
-    + committed row provenance and committed before measurement) scored
-    by exact pair-sequence match.  Covers the one analyzer output the
-    other three axes cannot see: IPADIC column-11 readings — authored
-    lemma tier, per-row conjugated derivation (行っ → イッ), rendaku
-    compounds, and the None discipline for unauthored/OOV surfaces
-    (never fabricate).  Same constant-frame shape and VALUES-oracle
-    pattern as t22/t25/t27.
-
-    Scale: constant-size in-memory frame through one iterator-form
-    pandas UDF + rollup aggregate — sf-invariant, one ArrowEvalPython
-    pass (the t27 plan shape)."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.reading_parity import (
-        READING_PARITY_CORPUS,
-        encode_pair,
-    )
-
-    rows = [
-        (sid, register, text, [encode_pair(s, r) for s, r in pairs])
-        for sid, register, text, pairs in READING_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark, rows, "sid long, register string, text string, exp array<string>"
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            encode_pair,
-            predicted_pairs,
-        )
-
-        for frame in batches:
-            preds = [
-                [encode_pair(s, r) for s, r in predicted_pairs(t)]
-                for t in frame["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
-            )
-
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("text", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t28_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.reading_parity import t28_values_sql
-
-    return t28_values_sql()
-
-
-T28_SQL = _t28_sql()
-
-
-def t29_userdict_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL user-dictionary parity metric (round 10, fifth axis —
-    VERDICT r9 next-round #5): the held-out user-dict corpus
-    (tokenizer/userdict_parity.py — see that module for the current
-    sentence/register counts; per-sentence inline user dictionaries +
-    modes, expected (surface, reading) pairs derived from the DOCUMENTED
-    override semantics — KuromojiNEologdUDFTest.java:261-302,342-381 —
-    and committed before measurement) scored by exact pair-sequence
-    match.  Pins segmentation override, reading pass-through (incl.
-    empty-readings → None and user-reading-beats-dictionary), stop-tag /
-    stop-word interaction on user tokens, and the ALL-modes
-    no-decompound exclusion, externally.
-
-    Scale: constant-size in-memory frame through one iterator-form
-    pandas UDF + rollup aggregate — sf-invariant (the t27/t28 plan
-    shape; per-config analyzers are lru-cached per worker)."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-        UD_PARITY_CORPUS,
-        encode_pair,
-    )
-
-    rows = [
-        (sid, register, mode, list(ud_rows),
-         [encode_pair(s, r) for s, r in pairs], text)
-        for sid, register, mode, ud_rows, text, pairs in UD_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark,
-        rows,
-        "sid long, register string, mode string, ud array<string>, "
-        "exp array<string>, text string",
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            encode_pair,
-            predicted_pairs,
-        )
-
-        for frame in batches:
-            preds = [
-                [
-                    encode_pair(s, r)
-                    for s, r in predicted_pairs(mode, tuple(ud), text)
-                ]
-                for mode, ud, text in zip(
-                    frame["mode"], frame["ud"], frame["text"]
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
-            )
-
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("mode", "ud", "text", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t29_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-        t29_values_sql,
-    )
-
-    return t29_values_sql()
-
-
-T29_SQL = _t29_sql()
-
-
-def t30_pos_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL POS-parity metric (round 10, sixth axis): the held-out
-    POS corpus (tokenizer/pos_parity.py — see that module for the
-    current sentence/register counts; expected (surface, pos) pairs
-    derived from the committed rows' POS strings + documented unknown
-    classes, committed before measurement) scored by exact
-    pair-sequence match.  Pins the one analyzer output where a wrong
-    ROW selection can hide with term/span/lemma/reading all identical:
-    POS subtype (一般 vs サ変接続 vs 固有名詞-地域…), the input to
-    stop-tag filtering and POS-based pipeline stages (t26's 名詞
-    aggregation).  Same constant-frame shape and VALUES-oracle pattern
-    as the other five axes."""
-    prepare(spark)
-    from pyspark.sql.functions import pandas_udf
-
-    from hive_udf_neologd_spark.tokenizer.pos_parity import (
-        POS_PARITY_CORPUS,
-        encode_pair,
-    )
-
-    rows = [
-        (sid, register, text, [encode_pair(s, p) for s, p in pairs])
-        for sid, register, text, pairs in POS_PARITY_CORPUS
-    ]
-    df = local_frame(
-        spark, rows, "sid long, register string, text string, exp array<string>"
-    )
-
-    @pandas_udf("matched boolean, n_pred long")
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hive_udf_neologd_spark.tokenizer.pos_parity import (
-            encode_pair,
-            predicted_pairs,
-        )
-
-        for frame in batches:
-            preds = [
-                [encode_pair(s, p) for s, p in predicted_pairs(t)]
-                for t in frame["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "matched": [
-                        p == list(e) for p, e in zip(preds, frame["exp"])
-                    ],
-                    "n_pred": [len(p) for p in preds],
-                }
-            )
-
-    per = df.select(
-        "register",
-        F.size("exp").alias("n_exp_row"),
-        _score(F.struct("text", "exp")).alias("s"),
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_sent"),
-        F.sum(F.col("s.matched").cast("long")).alias("n_match"),
-        F.sum("n_exp_row").alias("n_tok_exp"),
-        F.sum("s.n_pred").alias("n_tok_pred"),
-    ]
-    return (
-        per.rollup("register")
-        .agg(*aggs)
-        .withColumn("register", F.coalesce("register", F.lit("__total__")))
-        .withColumn("acc", F.col("n_match").cast("double") / F.col("n_sent"))
-        .orderBy("register")
-    )
-
-
-def _t30_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.pos_parity import t30_values_sql
-
-    return t30_values_sql()
-
-
-T30_SQL = _t30_sql()
-
-
 # --- sql03: SQL-registered tokenizer throughput ----------------------------
 def sql03_sql_udf_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Throughput gate for the SQL-surface tokenizer (VERDICT r7 next-round
@@ -2071,20 +1655,20 @@ TEXT_QUERIES = {
     "sql01_lateral_view_tokenize": sql01_lateral_view_tokenize,
     "sql02_cte_window_sql": sql02_cte_window_sql,
     # Append-only (DRIVER_GATED_50 contract): new entries go at the END.
-    "t18_ja_tokenize_throughput": t18_ja_tokenize_throughput,
+    "t18_ja_tokenize_throughput": _throughput_query("normal"),
     "t19_training_pipeline": t19_training_pipeline,
     "t20_stratified_sample": t20_stratified_sample,
     "t21_connection_matrix": t21_connection_matrix,
     "t22_segmentation_parity": t22_segmentation_parity,
-    "t23_ja_search_throughput": t23_ja_search_throughput,
-    "t24_ja_extended_throughput": t24_ja_extended_throughput,
+    "t23_ja_search_throughput": _throughput_query("search"),
+    "t24_ja_extended_throughput": _throughput_query("extended"),
     "sql03_sql_udf_throughput": sql03_sql_udf_throughput,
-    "t25_mode_parity": t25_mode_parity,
+    "t25_mode_parity": _parity_query(mode_parity.AXIS),
     "t26_ja_rich_throughput": t26_ja_rich_throughput,
-    "t27_lemma_parity": t27_lemma_parity,
-    "t28_reading_parity": t28_reading_parity,
-    "t29_userdict_parity": t29_userdict_parity,
-    "t30_pos_parity": t30_pos_parity,
+    "t27_lemma_parity": _parity_query(lemma_parity.AXIS),
+    "t28_reading_parity": _parity_query(reading_parity.AXIS),
+    "t29_userdict_parity": _parity_query(userdict_parity.AXIS),
+    "t30_pos_parity": _parity_query(pos_parity.AXIS),
 }
 
 # t08's oracle is a constant-literal VALUES table (see T08_SQL): DuckDB
@@ -2116,13 +1700,13 @@ TEXT_ORACLES = {
     "t20_stratified_sample": T20_SQL,
     "t21_connection_matrix": T21_SQL,
     "t22_segmentation_parity": T22_SQL,
-    "t23_ja_search_throughput": T23_SQL,
-    "t24_ja_extended_throughput": T24_SQL,
+    "t23_ja_search_throughput": _throughput_sql(T23_TOKENS),
+    "t24_ja_extended_throughput": _throughput_sql(T24_TOKENS),
     "sql03_sql_udf_throughput": SQL03_SQL,
-    "t25_mode_parity": T25_SQL,
+    "t25_mode_parity": values_sql(mode_parity.AXIS),
     "t26_ja_rich_throughput": T26_SQL,
-    "t27_lemma_parity": T27_SQL,
-    "t28_reading_parity": T28_SQL,
-    "t29_userdict_parity": T29_SQL,
-    "t30_pos_parity": T30_SQL,
+    "t27_lemma_parity": values_sql(lemma_parity.AXIS),
+    "t28_reading_parity": values_sql(reading_parity.AXIS),
+    "t29_userdict_parity": values_sql(userdict_parity.AXIS),
+    "t30_pos_parity": values_sql(pos_parity.AXIS),
 }

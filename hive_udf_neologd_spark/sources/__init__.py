@@ -114,10 +114,14 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     every caller).  Guide §4: eliminate the Python boundary.  Only for
     CONSTANT corpora/centroid frames (bounded size at any scale factor);
     real inputs keep going through read_table.
+
+    Turns on Arrow conversion itself: without it Spark silently takes the
+    pickled-RDD path for the same pandas frame.
     """
     import pandas as pd
     from pyspark.sql.types import StructType
 
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     struct = StructType.fromDDL(schema)
     pdf = pd.DataFrame([tuple(r) for r in rows], columns=struct.fieldNames())
     return spark.createDataFrame(pdf, schema=struct)

@@ -147,10 +147,12 @@ T18_TOKENS: dict[int, tuple[str, ...]] = {
 }
 
 
-def t18_values_rows() -> str:
+def values_rows(tokens_by_pid: dict[int, tuple[str, ...]]) -> str:
+    """``(pid, tokens_str, n_tokens_per_doc)`` VALUES rows for one mode's
+    pinned T18_POOL sequences (T18_TOKENS, T23_TOKENS or T24_TOKENS)."""
     rows = []
     for pid in range(len(T18_POOL)):
-        toks = T18_TOKENS[pid]
+        toks = tokens_by_pid[pid]
         rows.append(
             f"  (CAST({pid} AS BIGINT), '{'|'.join(toks)}', "
             f"CAST({len(toks)} AS INTEGER))"
@@ -175,17 +177,6 @@ T23_TOKENS: dict[int, tuple[str, ...]] = {
 }
 
 
-def t23_values_rows() -> str:
-    rows = []
-    for pid in range(len(T18_POOL)):
-        toks = T23_TOKENS[pid]
-        rows.append(
-            f"  (CAST({pid} AS BIGINT), '{'|'.join(toks)}', "
-            f"CAST({len(toks)} AS INTEGER))"
-        )
-    return ",\n".join(rows)
-
-
 # pid → exact EXTENDED-mode sequence for T18_POOL[pid] (t24): EXTENDED
 # lowers the decompound thresholds further and 1-grams unknown runs —
 # the third and last tokenization mode, so every mode now carries a
@@ -203,17 +194,6 @@ T24_TOKENS: dict[int, tuple[str, ...]] = {
     6: ('子供', '図書室', '図書', '室', '本', '借りる', '宿題', '済ませる', '校庭', '遊ぶ', '放課後', '教室', '合唱', '練習', '行う'),
     7: ('台風', '接近', '伴う', '気象庁', '気象', '庁', '大雨', '警戒', '呼び掛ける', '避難所', '避', '難所', '場所', '確認', '非常食', '非常', '食', '懐中電灯', '準備', 'ほしい'),
 }
-
-
-def t24_values_rows() -> str:
-    rows = []
-    for pid in range(len(T18_POOL)):
-        toks = T24_TOKENS[pid]
-        rows.append(
-            f"  (CAST({pid} AS BIGINT), '{'|'.join(toks)}', "
-            f"CAST({len(toks)} AS INTEGER))"
-        )
-    return ",\n".join(rows)
 
 
 def t17_values_sql() -> str:

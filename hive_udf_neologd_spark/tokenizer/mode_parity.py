@@ -97,7 +97,7 @@ full raw emission in order.
 
 from __future__ import annotations
 
-from functools import lru_cache
+from hive_udf_neologd_spark.tokenizer.axis import Axis
 
 MODE_PARITY_CORPUS: tuple[tuple[int, str, str, str, tuple[str, ...]], ...] = (
     # --- ms_kanji4_split: 4-kanji, both 2-kanji halves in dict ------------
@@ -581,70 +581,6 @@ def validate_emission(text: str, surfaces: tuple[str, ...]) -> list[tuple[int, i
     return got
 
 
-# --- engine side -------------------------------------------------------------
-
-
-@lru_cache(maxsize=4)
-def _raw_lattice(mode: str):
-    from hive_udf_neologd_spark.tokenizer.dictionary import builtin_dictionary
-    from hive_udf_neologd_spark.tokenizer.lattice import Lattice
-
-    return Lattice(builtin_dictionary(), None, mode)
-
-
-def predicted_surfaces(text: str, mode: str, lattice=None) -> list[str]:
-    """Raw mode-specific emission (punctuation already discarded by the
-    lattice) — the same altitude parity.predicted_spans scores NORMAL at,
-    so the metric isolates the MODE axis from the filter chain.
-    ``lattice`` overrides the cached engine (1M dress-rehearsal hook)."""
-    lat = lattice if lattice is not None else _raw_lattice(mode)
-    return [t.surface for t in lat.segment(text)]
-
-
-def compute_expected(dictionary=None) -> dict[str, tuple[int, int, int, int]]:
-    """Per-register (n_sent, n_match, n_tok_exp, n_tok_pred) by running the
-    live engine — the recapture source for ``T25_EXPECTED`` and the
-    consistency gate in tests.  ``dictionary`` scores the axis on an
-    alternate Dictionary (VERDICT r10 #2 dress rehearsal)."""
-    lats: dict[str, object] = {}
-    if dictionary is not None:
-        from hive_udf_neologd_spark.tokenizer.lattice import Lattice
-
-        lats = {
-            m: Lattice(dictionary, None, m)
-            for m in {row[2] for row in MODE_PARITY_CORPUS}
-        }
-    agg: dict[str, list[int]] = {}
-    for _sid, register, mode, text, surfaces in MODE_PARITY_CORPUS:
-        pred = predicted_surfaces(text, mode, lattice=lats.get(mode))
-        row = agg.setdefault(register, [0, 0, 0, 0])
-        row[0] += 1
-        row[1] += 1 if list(surfaces) == pred else 0
-        row[2] += len(surfaces)
-        row[3] += len(pred)
-    total = [0, 0, 0, 0]
-    for row in agg.values():
-        for i in range(4):
-            total[i] += row[i]
-    agg["__total__"] = total
-    return {k: tuple(v) for k, v in sorted(agg.items())}
-
-
-def accuracy(expected: dict[str, tuple[int, int, int, int]] | None = None) -> float:
-    exp = expected if expected is not None else compute_expected()
-    n, match, _, _ = exp["__total__"]
-    return match / n if n else 1.0
-
-
-def mismatches() -> list[tuple[int, str, str, str, tuple[str, ...], list[str]]]:
-    out = []
-    for sid, register, mode, text, surfaces in MODE_PARITY_CORPUS:
-        pred = predicted_surfaces(text, mode)
-        if list(surfaces) != pred:
-            out.append((sid, register, mode, text, surfaces, pred))
-    return out
-
-
 # CI floor (tests/test_parity.py): exact-match accuracy over the held-out
 # mode corpus.  Saturated at 1.0 after the wave-419 adjudication; a
 # dictionary/matrix/lattice change that regresses ANY sentence fails the
@@ -652,12 +588,9 @@ def mismatches() -> list[tuple[int, str, str, str, tuple[str, ...], list[str]]]:
 # correction appended to BASELINE.md).
 T25_ACC_FLOOR = 1.0
 
-# RECORDED aggregates — the t25 oracle constants, same recapture protocol
-# as T22_EXPECTED (parity.py): regenerate with
-# ``python -m hive_udf_neologd_spark.tokenizer.mode_parity`` after any
-# dictionary/matrix/lattice change and paste here; tests/test_parity.py's
-# mode-parity gate asserts compute_expected() == T25_EXPECTED so a
-# re-segmentation can never silently desynchronize the oracle.  Recorded
+# RECORDED aggregates — the t25 oracle constants; recapture with
+# ``python tools/parity_report.py`` after any dictionary/matrix/lattice
+# change and paste here (protocol in tokenizer/axis.py).  Recorded
 # round 9 at 143 sentences / 27 registers (third tranche — the round's
 # new/removed rows pinned across modes — measured 8/8 clean pre-fix): the second mode tranche
 # (sids 109-135) measured ZERO pre-fix mismatches — 27/27 first-try,
@@ -702,28 +635,25 @@ T25_EXPECTED: dict[str, tuple[int, int, int, int]] = {
 }
 
 
-def t25_values_sql() -> str:
-    rows = []
-    for register, (n_sent, n_match, n_tok_exp, n_tok_pred) in sorted(
-        T25_EXPECTED.items()
-    ):
-        rows.append(f"('{register}', {n_sent}, {n_match}, {n_tok_exp}, {n_tok_pred})")
-    values = ",\n  ".join(rows)
-    return f"""
-SELECT register, n_sent, n_match, n_tok_exp, n_tok_pred,
-       CAST(n_match AS DOUBLE) / n_sent AS acc
-FROM (VALUES
-  {values}
-) AS v(register, n_sent, n_match, n_tok_exp, n_tok_pred)
-ORDER BY register
-"""
+def _lattice(config: tuple[str, ...], dictionary):
+    from hive_udf_neologd_spark.tokenizer.dictionary import builtin_dictionary
+    from hive_udf_neologd_spark.tokenizer.lattice import Lattice
+
+    (mode,) = config
+    return Lattice(dictionary if dictionary is not None else builtin_dictionary(), None, mode)
 
 
-if __name__ == "__main__":
-    exp = compute_expected()
-    for reg, (n, m, te, tp) in exp.items():
-        flag = "" if m == n else "  <-- MISMATCH"
-        print(f"{reg:22s} n={n:3d} match={m:3d} tok_exp={te:4d} tok_pred={tp:4d}{flag}")
-    print(f"exact-match accuracy: {accuracy(exp):.6f}")
-    for sid, reg, mode, text, want, got in mismatches():
-        print(f"\n#{sid} [{reg}/{mode}] {text}\n  want: {'|'.join(want)}\n  got:  {'|'.join(got)}")
+# Scored on the raw lattice emission (punctuation already discarded), the
+# altitude parity.predicted_spans scores NORMAL at, so the metric
+# isolates the MODE axis from the filter chain.
+AXIS = Axis(
+    module=__name__,
+    corpus=tuple(
+        (sid, register, (mode,), text, surfaces)
+        for sid, register, mode, text, surfaces in MODE_PARITY_CORPUS
+    ),
+    build=_lattice,
+    predict=lambda lattice, text: [t.surface for t in lattice.segment(text)],
+    expected=T25_EXPECTED,
+    floor=T25_ACC_FLOOR,
+)

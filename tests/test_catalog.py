@@ -68,3 +68,27 @@ def test_q34_hll_estimate_within_bound(spark, duck):
     ).fetch_df().set_index("c_mktsegment")
     for seg, row in exact.iterrows():
         assert sdf.loc[seg, "n_customers"] == row["n"]
+
+
+def test_u01_rounds_ties_like_sql(spark, tmp_path):
+    """u01's pct = ROUND(rnk / n, 4) rounds a tie half away from zero like
+    its SQL oracle: with 800 customers in one segment, rank 3 is 0.00375
+    → 0.0038 (Python's round on the double gives 0.0037)."""
+    n = 800
+    pd.DataFrame(
+        {
+            "c_custkey": pd.Series(range(1, n + 1), dtype="int64"),
+            "c_mktsegment": ["BUILDING"] * n,
+            "c_acctbal": [float(i) for i in range(n)],
+        }
+    ).to_parquet(tmp_path / "customer.parquet", index=False)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW customer AS SELECT * FROM read_parquet('{tmp_path}/customer.parquet')"
+    )
+    name = "u01_applyinpandas_rank"
+    sdf = QUERIES[name](spark, str(tmp_path)).toPandas()
+    ddf = con.execute(ORACLES[name]).fetch_df()
+    con.close()
+    assert ddf["pct"].tolist()[2] == 0.0038
+    pd.testing.assert_frame_equal(_canon(sdf), _canon(ddf))

@@ -379,6 +379,14 @@ def csv_swap_dictionary():
     return Dictionary(entries)
 
 
+def _assert_axis_reproduces(module, dictionary):
+    """An exact-match axis (tokenizer/axis.py) scored on ``dictionary``
+    reproduces its recorded aggregates."""
+    from hive_udf_neologd_spark.tokenizer.axis import compute_expected
+
+    assert compute_expected(module.AXIS, dictionary=dictionary) == module.AXIS.expected
+
+
 @pytest.mark.slow
 class TestFullFidelityMillionEntrySwap:
     def test_asset_shape_is_neologd_faithful(self, csv_swap_dictionary):
@@ -413,37 +421,27 @@ class TestFullFidelityMillionEntrySwap:
     def test_t25_mode_axis(self, csv_swap_dictionary):
         from hive_udf_neologd_spark.tokenizer import mode_parity
 
-        assert mode_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == mode_parity.T25_EXPECTED
+        _assert_axis_reproduces(mode_parity, csv_swap_dictionary)
 
     def test_t27_lemma_axis(self, csv_swap_dictionary):
         from hive_udf_neologd_spark.tokenizer import lemma_parity
 
-        assert lemma_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == lemma_parity.T27_EXPECTED
+        _assert_axis_reproduces(lemma_parity, csv_swap_dictionary)
 
     def test_t28_reading_axis(self, csv_swap_dictionary):
         from hive_udf_neologd_spark.tokenizer import reading_parity
 
-        assert reading_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == reading_parity.T28_EXPECTED
+        _assert_axis_reproduces(reading_parity, csv_swap_dictionary)
 
     def test_t29_userdict_axis(self, csv_swap_dictionary):
         from hive_udf_neologd_spark.tokenizer import userdict_parity
 
-        assert userdict_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == userdict_parity.T29_EXPECTED
+        _assert_axis_reproduces(userdict_parity, csv_swap_dictionary)
 
     def test_t30_pos_axis(self, csv_swap_dictionary):
         from hive_udf_neologd_spark.tokenizer import pos_parity
 
-        assert pos_parity.compute_expected(
-            dictionary=csv_swap_dictionary
-        ) == pos_parity.T30_EXPECTED
+        _assert_axis_reproduces(pos_parity, csv_swap_dictionary)
 
     def test_goldens_and_anchors(self, csv_swap_dictionary):
         from hive_udf_neologd_spark.tokenizer.analyzer import JapaneseAnalyzer

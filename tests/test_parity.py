@@ -6,6 +6,14 @@ from __future__ import annotations
 
 import pytest
 
+from hive_udf_neologd_spark.tokenizer import (
+    axis,
+    lemma_parity,
+    mode_parity,
+    pos_parity,
+    reading_parity,
+    userdict_parity,
+)
 from hive_udf_neologd_spark.tokenizer.parity import (
     PARITY_CORPUS,
     T22_EXPECTED,
@@ -154,6 +162,56 @@ class TestT22Catalog:
             assert r["f1"] == pytest.approx(2 * tp / (n_pred + n_exp))
 
 
+# --- the exact-match axes (tokenizer/axis.py): t25, t27-t30 --------------
+
+
+class _ExactMatchAxisChecks:
+    """Checks every exact-match axis shares; each subclass names its axis
+    module, so the test ids stay per axis."""
+
+    module = None
+
+    def test_recorded_matches_live_engine(self):
+        """Recapture guard — identical contract to T22_EXPECTED."""
+        ax = self.module.AXIS
+        assert axis.compute_expected(ax) == ax.expected
+
+    def test_accuracy_floor(self):
+        ax = self.module.AXIS
+        acc = axis.accuracy(ax.expected)
+        assert acc >= ax.floor, (
+            f"held-out {self.module.__name__} regressed: accuracy "
+            f"{acc:.6f} < floor {ax.floor}"
+        )
+
+    def test_total_row_is_register_sum(self):
+        expected = self.module.AXIS.expected
+        sums = [0, 0, 0, 0]
+        for reg, row in expected.items():
+            if reg == "__total__":
+                continue
+            for i in range(4):
+                sums[i] += row[i]
+        assert tuple(sums) == expected["__total__"]
+
+
+def _assert_query_matches_recorded(spark, sf_dir, name, module):
+    """The catalog query reproduces the axis's recorded aggregates, with
+    acc = n_match / n_sent on every row."""
+    from hive_udf_neologd_spark.catalog import QUERIES
+
+    rows = QUERIES[name](spark, sf_dir).collect()
+    got = {
+        r["register"]: (
+            r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
+        )
+        for r in rows
+    }
+    assert got == module.AXIS.expected
+    for r in rows:
+        assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+
+
 # --- held-out SEARCH/EXTENDED mode-parity corpus (VERDICT r8 #1) -----------
 
 
@@ -215,82 +273,20 @@ class TestModeCorpusIntegrity:
                         )
 
 
-class TestModeRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        """Recapture guard — identical contract to T22_EXPECTED."""
-        from hive_udf_neologd_spark.tokenizer.mode_parity import (
-            T25_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T25_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.mode_parity import (
-            T25_ACC_FLOOR,
-            T25_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T25_EXPECTED)
-        assert acc >= T25_ACC_FLOOR, (
-            f"held-out mode parity regressed: accuracy {acc:.6f} "
-            f"< floor {T25_ACC_FLOOR}"
-        )
-
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.mode_parity import T25_EXPECTED
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T25_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T25_EXPECTED["__total__"]
+class TestModeRecordedAggregates(_ExactMatchAxisChecks):
+    module = mode_parity
 
 
 class TestT25Catalog:
-    def test_t25_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import t25_mode_parity
-        from hive_udf_neologd_spark.tokenizer.mode_parity import T25_EXPECTED
-
-        rows = t25_mode_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T25_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t25_matches_oracle_values(self, spark, sf_dir):
+        _assert_query_matches_recorded(spark, sf_dir, "t25_mode_parity", mode_parity)
 
 
 # --- held-out LEMMA-parity corpus (round 9, third axis) --------------------
 
 
-class TestLemmaRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import (
-            T27_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T27_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import (
-            T27_ACC_FLOOR,
-            T27_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T27_EXPECTED)
-        assert acc >= T27_ACC_FLOOR, (
-            f"held-out lemma parity regressed: accuracy {acc:.6f} "
-            f"< floor {T27_ACC_FLOOR}"
-        )
+class TestLemmaRecordedAggregates(_ExactMatchAxisChecks):
+    module = lemma_parity
 
     def test_shape_and_hygiene(self):
         from hive_udf_neologd_spark.tokenizer.lemma_parity import (
@@ -308,59 +304,17 @@ class TestLemmaRecordedAggregates:
             for t in terms:
                 assert t == t.strip() and t
 
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import T27_EXPECTED
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T27_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T27_EXPECTED["__total__"]
-
 
 class TestT27Catalog:
-    def test_t27_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import t27_lemma_parity
-        from hive_udf_neologd_spark.tokenizer.lemma_parity import T27_EXPECTED
-
-        rows = t27_lemma_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T27_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t27_matches_oracle_values(self, spark, sf_dir):
+        _assert_query_matches_recorded(spark, sf_dir, "t27_lemma_parity", lemma_parity)
 
 
 # --- held-out READING-parity corpus (round 10, fourth axis) ----------------
 
 
-class TestReadingRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            T28_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T28_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            T28_ACC_FLOOR,
-            T28_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T28_EXPECTED)
-        assert acc >= T28_ACC_FLOOR, (
-            f"held-out reading parity regressed: accuracy {acc:.6f} "
-            f"< floor {T28_ACC_FLOOR}"
-        )
+class TestReadingRecordedAggregates(_ExactMatchAxisChecks):
+    module = reading_parity
 
     def test_shape_and_hygiene(self):
         from hive_udf_neologd_spark.tokenizer.reading_parity import (
@@ -382,65 +336,17 @@ class TestReadingRecordedAggregates:
                         for c in reading
                     ), (surface, reading)
 
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            T28_EXPECTED,
-        )
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T28_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T28_EXPECTED["__total__"]
-
 
 class TestT28Catalog:
-    def test_t28_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import (
-            t28_reading_parity,
-        )
-        from hive_udf_neologd_spark.tokenizer.reading_parity import (
-            T28_EXPECTED,
-        )
-
-        rows = t28_reading_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T28_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t28_matches_oracle_values(self, spark, sf_dir):
+        _assert_query_matches_recorded(spark, sf_dir, "t28_reading_parity", reading_parity)
 
 
 # --- held-out USER-DICT parity corpus (round 10, fifth axis) ---------------
 
 
-class TestUserdictRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            T29_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T29_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            T29_ACC_FLOOR,
-            T29_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T29_EXPECTED)
-        assert acc >= T29_ACC_FLOOR, (
-            f"held-out user-dict parity regressed: accuracy {acc:.6f} "
-            f"< floor {T29_ACC_FLOOR}"
-        )
+class TestUserdictRecordedAggregates(_ExactMatchAxisChecks):
+    module = userdict_parity
 
     def test_shape_and_hygiene(self):
         from hive_udf_neologd_spark.tokenizer.userdict_parity import (
@@ -460,65 +366,17 @@ class TestUserdictRecordedAggregates:
                 assert len(parts) >= 4
                 assert "".join(parts[1].split()) == parts[0]
 
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            T29_EXPECTED,
-        )
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T29_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T29_EXPECTED["__total__"]
-
 
 class TestT29Catalog:
-    def test_t29_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import (
-            t29_userdict_parity,
-        )
-        from hive_udf_neologd_spark.tokenizer.userdict_parity import (
-            T29_EXPECTED,
-        )
-
-        rows = t29_userdict_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T29_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t29_matches_oracle_values(self, spark, sf_dir):
+        _assert_query_matches_recorded(spark, sf_dir, "t29_userdict_parity", userdict_parity)
 
 
 # --- held-out POS parity corpus (round 10, sixth axis) ---------------------
 
 
-class TestPosRecordedAggregates:
-    def test_recorded_matches_live_engine(self):
-        from hive_udf_neologd_spark.tokenizer.pos_parity import (
-            T30_EXPECTED,
-            compute_expected,
-        )
-
-        assert compute_expected() == T30_EXPECTED
-
-    def test_accuracy_floor(self):
-        from hive_udf_neologd_spark.tokenizer.pos_parity import (
-            T30_ACC_FLOOR,
-            T30_EXPECTED,
-            accuracy,
-        )
-
-        acc = accuracy(T30_EXPECTED)
-        assert acc >= T30_ACC_FLOOR, (
-            f"held-out POS parity regressed: accuracy {acc:.6f} "
-            f"< floor {T30_ACC_FLOOR}"
-        )
+class TestPosRecordedAggregates(_ExactMatchAxisChecks):
+    module = pos_parity
 
     def test_shape_and_hygiene(self):
         from hive_udf_neologd_spark.tokenizer.pos_parity import (
@@ -535,30 +393,7 @@ class TestPosRecordedAggregates:
                 # POS strings are hyphen-joined IPADIC levels.
                 assert pos and " " not in pos
 
-    def test_total_row_is_register_sum(self):
-        from hive_udf_neologd_spark.tokenizer.pos_parity import T30_EXPECTED
-
-        sums = [0, 0, 0, 0]
-        for reg, row in T30_EXPECTED.items():
-            if reg == "__total__":
-                continue
-            for i in range(4):
-                sums[i] += row[i]
-        assert tuple(sums) == T30_EXPECTED["__total__"]
-
 
 class TestT30Catalog:
-    def test_t30_matches_oracle_values(self, spark):
-        from hive_udf_neologd_spark.operators.textops import t30_pos_parity
-        from hive_udf_neologd_spark.tokenizer.pos_parity import T30_EXPECTED
-
-        rows = t30_pos_parity(spark, "/root/testdata/sf0.001").collect()
-        got = {
-            r["register"]: (
-                r["n_sent"], r["n_match"], r["n_tok_exp"], r["n_tok_pred"],
-            )
-            for r in rows
-        }
-        assert got == T30_EXPECTED
-        for r in rows:
-            assert r["acc"] == pytest.approx(r["n_match"] / r["n_sent"])
+    def test_t30_matches_oracle_values(self, spark, sf_dir):
+        _assert_query_matches_recorded(spark, sf_dir, "t30_pos_parity", pos_parity)

@@ -117,3 +117,23 @@ def test_compact_parquet(spark, tmp_path):
 
     assert len(glob.glob(f"{out}/*.parquet")) == 1
     assert spark.read.parquet(out).count() == docs.count()
+
+
+def test_local_frame_turns_on_arrow_itself(spark):
+    """local_frame plans a LocalTableScan even when the session has Arrow
+    conversion off, instead of silently taking the pickled-RDD path."""
+    from hive_udf_neologd_spark.sources import local_frame
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = local_frame(spark, [(1, "a"), (2, "b")], "id long, s string")
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert sorted(df.collect()) == [(1, "a"), (2, "b")]

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hive_udf_neologd_spark import register_udfs, tokenize_ja, tokenize_ja_version
+from hive_udf_neologd_spark.functions.tokenize import tokenize_ja_rich
 from hive_udf_neologd_spark.version import VERSION
 
 
@@ -43,11 +44,13 @@ def test_udf_with_user_dict(spark, docs):
 
 
 def test_udf_construction_errors_are_plan_time(spark):
-    # Fail-at-plan-time like the reference's initialize (SURVEY.md §3).
-    with pytest.raises(ValueError):
-        tokenize_ja(mode="unsupported mode")
-    with pytest.raises(TypeError):
-        tokenize_ja(user_dict=123)
+    # Fail-at-plan-time like the reference's initialize (SURVEY.md §3),
+    # for both factories.
+    for factory in (tokenize_ja, tokenize_ja_rich):
+        with pytest.raises(ValueError):
+            factory(mode="unsupported mode")
+        with pytest.raises(TypeError):
+            factory(user_dict=123)
 
 
 def test_sql_registration(spark, docs):

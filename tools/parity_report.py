@@ -1,9 +1,13 @@
-"""Per-sentence parity report: engine segmentation vs the pinned corpus.
+"""Parity report and recapture command for every held-out parity axis.
 
 Usage: python tools/parity_report.py [--all]
 Prints every sentence whose predicted spans differ from the expected ones
 (or all with --all), with aligned token lists — the authoring loop for
-dictionary waves driven by measured F1 failures (VERDICT r6 #8).
+dictionary waves driven by measured F1 failures (VERDICT r6 #8).  Then,
+for t22 and each exact-match axis (t25, t27-t30; tokenizer/axis.py), it
+prints the live per-register aggregates — paste them over the recorded
+``T22_EXPECTED`` / ``T2x_EXPECTED`` after an adjudicated change — and
+every mismatching sentence.
 """
 
 from __future__ import annotations
@@ -15,12 +19,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hive_udf_neologd_spark.tokenizer.parity import (  # noqa: E402
     PARITY_CORPUS,
+    T22_EXPECTED,
     _raw_lattice,
     compute_expected,
     expected_spans,
     micro_f1,
     predicted_spans,
 )
+
+
+def print_aggregates(agg: dict, recorded: dict) -> None:
+    """Live per-register aggregates, ready to paste over ``recorded``."""
+    for reg, row in agg.items():
+        flag = "" if row == recorded.get(reg) else "  # <-- differs from recorded"
+        print(f"    {reg!r}: {row},{flag}")
 
 
 def main() -> int:
@@ -41,24 +53,37 @@ def main() -> int:
     n, tp, n_pred, n_exp = agg["__total__"]
     print(f"\nsentences={n} differing={n_diff} tp={tp} n_pred={n_pred} n_exp={n_exp}")
     print(f"micro-F1={micro_f1(agg):.6f}  P={tp/n_pred:.4f}  R={tp/n_exp:.4f}")
-    for reg, (ns, t, p, e) in agg.items():
-        if reg != "__total__":
-            print(f"  {reg:8s} n={ns:3d} f1={2*t/(p+e):.4f}")
-    # Mode-parity corpus (round 9, tokenizer/mode_parity.py) — the
-    # SEARCH/EXTENDED axis in the same report.
-    from hive_udf_neologd_spark.tokenizer.mode_parity import (  # noqa: E402
+    print("=== parity (T22_EXPECTED)")
+    print_aggregates(agg, T22_EXPECTED)
+    from hive_udf_neologd_spark.tokenizer import (  # noqa: E402
+        lemma_parity,
+        mode_parity,
+        pos_parity,
+        reading_parity,
+        userdict_parity,
+    )
+    from hive_udf_neologd_spark.tokenizer.axis import (  # noqa: E402
         accuracy,
-        compute_expected as mode_expected,
+        compute_expected as axis_expected,
         mismatches,
     )
 
-    for sid, reg, mode, text, want, got in mismatches():
-        print(f"--- mode #{sid} [{reg}/{mode}] {text}")
-        print(f"  exp : {'|'.join(want)}")
-        print(f"  pred: {'|'.join(got)}")
-    magg = mode_expected()
-    mn, mm, _, _ = magg["__total__"]
-    print(f"mode-parity: sentences={mn} matched={mm} accuracy={accuracy(magg):.6f}")
+    def show(tokens) -> str:
+        return "|".join(t.replace("\x1f", ":") for t in tokens)
+
+    for module in (mode_parity, lemma_parity, reading_parity, userdict_parity, pos_parity):
+        axis = module.AXIS
+        name = module.__name__.rsplit(".", 1)[1]
+        aagg = axis_expected(axis)
+        print(f"\n=== {name}")
+        print_aggregates(aagg, axis.expected)
+        for sid, reg, config, text, want, got in mismatches(axis):
+            cfg = f"/{config[0]}" if config else ""
+            print(f"--- {name} #{sid} [{reg}{cfg}] {text}")
+            print(f"  exp : {show(want)}")
+            print(f"  pred: {show(got)}")
+        an, am, _, _ = aagg["__total__"]
+        print(f"{name}: sentences={an} matched={am} accuracy={accuracy(aagg):.6f}")
 
     # Reading-tier coverage stats (VERDICT r10 #4): how much of the live
     # corpus vocabulary the authored tier covers, and the head of the
