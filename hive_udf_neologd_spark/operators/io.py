@@ -16,8 +16,6 @@ canonical interchange; these paths exist for ingest interop.
 
 from __future__ import annotations
 
-import atexit
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,86 +29,7 @@ from pyspark.sql.types import (
 )
 
 from hive_udf_neologd_spark.session import prepare
-from hive_udf_neologd_spark.sources import read_csv, read_json, read_table
-
-# Staged fixtures on tmpfs when available (round 12): the staged
-# write/read-back is harness choreography around the operator under
-# measurement (round-trip fidelity, partition pruning, compaction
-# plan shape), and /tmp disk IO was the same noise source the
-# round-11 s04 protocol fix removed from the streaming scratch
-# (streaming/e2e.py).  Falls back to /tmp without /dev/shm.
-# Root is re-decided per staging call via sources.scratch_root (judge
-# ADVICE r12 #2: gate tmpfs on free space, not existence — a 64 MB Docker
-# /dev/shm must fall through to /tmp instead of ENOSPC).
-_STAGE_ROOTS = ("/dev/shm/spark_graft_io", "/tmp/spark_graft_io")
-
-
-def _stage_root(est_bytes: int = 0) -> str:
-    from hive_udf_neologd_spark.sources import scratch_root
-
-    return scratch_root("spark_graft_io", max(256 << 20, 4 * est_bytes))
-_RUN_IDS = itertools.count()
-
-
-def _stage(sf_dir: str, name: str) -> str:
-    """Per-run unique path (pid + counter): two concurrent runs against the
-    same sf dir must not clobber each other's staged files mid-read."""
-    return (
-        f"{_stage_root()}/{os.path.basename(sf_dir.rstrip('/'))}/"
-        f"{name}_{os.getpid()}_{next(_RUN_IDS)}"
-    )
-
-
-_STAGED_INPUTS: dict[str, object] = {}
-
-
-def _stage_input_once(sf_dir: str, name: str, source: str, write_fn) -> str:
-    """Stage a PURE input fixture once per process — the round-11 s04
-    staging protocol (VERDICT r10 #3, `streaming/e2e.py:_stage_once`)
-    extended to the io tier in round 12: the sprayed / partitioned /
-    epoch-split layouts io03-io05 read are deterministic functions of
-    (sf_dir, source table), so re-writing them per timed run only
-    re-times fixture construction that is NOT the operator under
-    measurement (partition-pruned read, compaction, mergeSchema read).
-    With the memo, bench's warmup run pays the fixture write and the
-    timed runs measure the declared operator.  Keyed on the source
-    table's on-disk fingerprint so a regenerated sf_dir restages instead
-    of serving a stale layout (judge ADVICE r11 #2).  io01/io02 keep
-    per-run writes: there the format round-trip write IS the operator.
-    ``write_fn(path)`` must leave a complete fixture at ``path``
-    (mode="overwrite" writers — safe after an interrupted stage)."""
-    from hive_udf_neologd_spark.streaming.e2e import _source_fingerprint
-
-    fp = _source_fingerprint(sf_dir, source)
-    stage = (
-        f"{_stage_root(fp[1] if fp else 0)}/"
-        f"{os.path.basename(sf_dir.rstrip('/'))}/"
-        f"{name}_{os.getpid()}"
-    )
-    if _STAGED_INPUTS.get(stage) != fp or fp is None:
-        write_fn(stage)
-        _STAGED_INPUTS[stage] = fp
-    return stage
-
-
-def _cleanup_stage() -> None:
-    """Remove THIS process's staged subtrees at interpreter exit — on
-    tmpfs they are RAM, and per-run-unique paths would otherwise
-    accumulate across bench/test sessions (the judge-ADVICE r11 #1
-    pattern, same ownership test as streaming/e2e.py: an exact pid
-    token in the basename)."""
-    import glob as _glob
-    import shutil as _shutil
-
-    pid = str(os.getpid())
-    for root in _STAGE_ROOTS:
-        for path in _glob.glob(f"{root}/*/*"):
-            if pid in os.path.basename(path).split("_"):
-                _shutil.rmtree(path, ignore_errors=True)
-
-
-atexit.register(_cleanup_stage)
-
+from hive_udf_neologd_spark.sources import read_csv, read_json, read_table, scratch
 
 ORDERS_CSV_SCHEMA = StructType(
     [
@@ -129,7 +48,7 @@ def io01_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest-round-trip float formatting; the oracle aggregates the
     original parquet, so the compare proves lossless round-trip."""
     prepare(spark)
-    stage = _stage(sf_dir, "orders_csv")
+    stage = scratch.fresh(sf_dir, "orders_csv")
     (
         read_table(spark, sf_dir, "orders")
         .select(
@@ -181,7 +100,7 @@ def io02_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     formatting) → read back with a declared schema → per-type stats over a
     reconstructed event-time column."""
     prepare(spark)
-    stage = _stage(sf_dir, "events_json")
+    stage = scratch.fresh(sf_dir, "events_json")
     (
         read_table(spark, sf_dir, "events")
         .select(
@@ -228,7 +147,7 @@ def io03_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory listing, not data scan — asserted in tests/test_plans.py).
     Hourly revenue for purchases only."""
     prepare(spark)
-    stage = _stage_input_once(
+    stage = scratch.stage_once(
         sf_dir,
         "events_by_type",
         "events",
@@ -274,7 +193,7 @@ def io04_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_neologd_spark.sources import compact_parquet
 
     prepare(spark)
-    sprayed = _stage_input_once(
+    sprayed = scratch.stage_once(
         sf_dir,
         "events_sprayed",
         "events",
@@ -287,7 +206,7 @@ def io04_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The compaction itself is the operator under measurement — its
     # output write stays inside every timed run (per-run unique path).
-    compacted = _stage(sf_dir, "events_compacted")
+    compacted = scratch.fresh(sf_dir, "events_compacted")
     compact_parquet(spark, sprayed, compacted, target_mb=128)
     return (
         spark.read.parquet(compacted)
@@ -336,7 +255,7 @@ def io05_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "user_id", "event_type", "ts", "value"
         ).write.mode("overwrite").parquet(os.path.join(root, "epoch=new"))
 
-    root = _stage_input_once(sf_dir, "events_evolved", "events", _write_epochs)
+    root = scratch.stage_once(sf_dir, "events_evolved", "events", _write_epochs)
     merged = spark.read.option("mergeSchema", "true").parquet(root)
     return (
         merged.groupBy("epoch", "event_type")

@@ -78,27 +78,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def scratch_root(name: str, min_free_bytes: int = 256 << 20) -> str:
-    """Scratch directory root for harness fixtures: tmpfs when it exists
-    AND has headroom, else /tmp.
-
-    Existence alone was the round-12 rule; judge ADVICE r12 #2 points out
-    containers commonly mount a SMALL tmpfs at /dev/shm (Docker defaults
-    to 64 MB), where staging a multi-MB fixture fails with ENOSPC while
-    /tmp would have worked — so the choice is gated on statvfs free bytes
-    (floor 256 MB, callers pass a larger estimate when they know the
-    fixture size).  Decided per call, not at import: free space changes as
-    fixtures accumulate."""
-    if os.path.isdir("/dev/shm"):
-        try:
-            st = os.statvfs("/dev/shm")
-            if st.f_bavail * st.f_frsize >= min_free_bytes:
-                return f"/dev/shm/{name}"
-        except OSError:
-            pass
-    return f"/tmp/{name}"
-
-
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     """Constant driver-side frame as a true LocalRelation (round 13).
 

@@ -21,11 +21,8 @@ test-fixture artifact, not part of the streaming plan.
 
 from __future__ import annotations
 
-import atexit
-import glob
 import itertools
 import os
-import shutil
 from contextlib import contextmanager
 from datetime import datetime, timedelta
 
@@ -33,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_udf_neologd_spark.session import prepare
-from hive_udf_neologd_spark.sources import read_table
+from hive_udf_neologd_spark.sources import read_table, scratch
 from hive_udf_neologd_spark.streaming.term_counts import (
     read_document_stream,
     read_event_stream,
@@ -41,58 +38,9 @@ from hive_udf_neologd_spark.streaming.term_counts import (
     streaming_term_counts,
 )
 
+# Run counter for query names: each run gets its own memory sink and
+# checkpoint.
 _RUN_IDS = itertools.count()
-
-
-# Harness scratch root: tmpfs when available (the staged snapshots and
-# per-query checkpoints are ephemeral bench/test fixtures, and putting
-# them in RAM removes the disk-IO sensitivity that dominated s04's
-# variance band — BASELINE.md round-11 protocol note).  Falls back to
-# /tmp on hosts without /dev/shm.
-# Root re-decided per call via sources.scratch_root (judge ADVICE r12 #2:
-# gate tmpfs on free space, not existence — a 64 MB Docker /dev/shm must
-# fall through to /tmp instead of ENOSPC).
-_SCRATCH_ROOTS = ("/dev/shm/spark_graft_stream", "/tmp/spark_graft_stream")
-
-
-def _scratch_root(est_bytes: int = 0) -> str:
-    from hive_udf_neologd_spark.sources import scratch_root
-
-    return scratch_root("spark_graft_stream", max(256 << 20, 4 * est_bytes))
-
-
-def _stage_dir(sf_dir: str, name: str) -> str:
-    """Per-run unique staging path: pid + run counter keep concurrent
-    processes (bench + check_oracle against the same sf dir) from
-    clobbering each other's staged files mid-readStream."""
-    base = os.path.basename(sf_dir.rstrip("/"))
-    return f"{_scratch_root()}/{base}/{name}_{os.getpid()}_{next(_RUN_IDS)}"
-
-
-def _checkpoint_dir(name: str) -> str:
-    """Explicit per-query checkpoint under the tmpfs scratch root —
-    Spark's implicit temp checkpoint lands in java.io.tmpdir (disk),
-    which is exactly the small-file-write noise the protocol excludes."""
-    return f"{_scratch_root()}/ckpt/{name}"
-
-
-def _cleanup_scratch() -> None:
-    """Remove THIS process's scratch subtrees at interpreter exit
-    (judge ADVICE r11 #1): explicit checkpointLocation dirs persist
-    after query stop (unlike Spark's implicit temp checkpoints), and on
-    tmpfs they are RAM — repeated bench/test sessions would otherwise
-    accumulate under /dev/shm.  Ownership test is an exact pid TOKEN in
-    the basename (staged snapshots end or embed ``_<pid>``, checkpoint
-    names end ``_<pid>``) — a substring test would let pid 123 claim
-    ``events_1234``."""
-    pid = str(os.getpid())
-    for root in _SCRATCH_ROOTS:
-        for path in glob.glob(f"{root}/*/*"):
-            if pid in os.path.basename(path).split("_"):
-                shutil.rmtree(path, ignore_errors=True)
-
-
-atexit.register(_cleanup_scratch)
 
 
 # --- scale-adaptive streaming shuffle/state partitioning (round 12) --------
@@ -107,9 +55,7 @@ atexit.register(_cleanup_scratch)
 # one state partition per advisory chunk of source bytes.  Deliberately
 # core-count-independent — the driver benches at several SPARK_GRAFT_CPUS
 # values and this derivation gives the same partition count at each.
-_STREAM_ADVISORY_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_ADVISORY_BYTES", str(64 * 1024 * 1024))
-)
+_STREAM_ADVISORY_BYTES = 64 * 1024 * 1024
 _STREAM_MAX_PARTITIONS = 32768  # runaway guard for pathological derivations
 
 
@@ -146,74 +92,23 @@ def _stream_shuffle_scope(spark: SparkSession, stage: str):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _source_fingerprint(sf_dir: str, name: str):
-    """Cheap identity of a source table on disk — (file count, total
-    bytes, max mtime_ns) over ``<sf_dir>/<name>.parquet`` (file or
-    directory).  Regenerating the sf fixture in-process changes the
-    fingerprint, which invalidates the staged copy (judge ADVICE
-    r11 #2)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            n = total = newest = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    st = os.stat(os.path.join(root, f))
-                    n += 1
-                    total += st.st_size
-                    newest = max(newest, st.st_mtime_ns)
-            return (n, total, newest)
-        st = os.stat(path)
-        return (1, st.st_size, st.st_mtime_ns)
-    except OSError:
-        return None
-
-
-_STAGED: dict[str, tuple] = {}
-
-
-def _stage_once(sf_dir: str, name: str, df) -> str:
-    """Stage a PURE input snapshot once per process and reuse it on every
-    subsequent call (VERDICT r10 #3): the staged parquet is a
-    deterministic function of (sf_dir, name), so re-writing it per run
-    only re-times batch disk IO that is not part of the streaming
-    pipeline under measurement — it was the dominant term in s04's
-    3.8-11.2 s bench band.  With the memo, bench's warmup run pays the
-    staging write and the timed runs measure readStream → transform →
-    sink, which is the operator being gated.  The pid in the path keeps
-    the cross-process isolation _stage_dir provides; only snapshots that
-    are never mutated after staging may use this (s11's incremental
-    append keeps the unique-per-run path).  The memo is keyed on a
-    source fingerprint (ADVICE r11 #2): a regenerated sf_dir restages
-    instead of silently serving the stale snapshot."""
-    base = os.path.basename(sf_dir.rstrip("/"))
-    fp = _source_fingerprint(sf_dir, name)
-    stage = f"{_scratch_root(fp[1] if fp else 0)}/{base}/{name}_{os.getpid()}"
-    if _STAGED.get(stage) != fp or fp is None:
-        df.coalesce(4).write.mode("overwrite").parquet(stage)
-        _STAGED[stage] = fp
-    return stage
-
-
 def s03_streaming_event_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     # Stage through read_table so the nanos→micros timestamp normalization
     # matches the batch path; multiple files → multiple source splits.
-    stage = _stage_once(sf_dir, "events", read_table(spark, sf_dir, "events"))
-    name = f"s03_sink_{next(_RUN_IDS)}_{os.getpid()}"
+    stage = scratch.stage_once(
+        sf_dir,
+        "events",
+        "events",
+        lambda p: read_table(spark, sf_dir, "events")
+        .coalesce(4)
+        .write.mode("overwrite")
+        .parquet(p),
+    )
     out = streaming_event_counts(
         read_event_stream(spark, stage), window="1 hour", watermark="2 hours"
     )
-    with _stream_shuffle_scope(spark, stage):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    name = _run_append(out, "s03_sink", stage=stage)
     return (
         spark.table(name)
         .select(
@@ -249,30 +144,25 @@ def s04_streaming_term_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     ``string_split`` (exact on this corpus — t01's equivalence argument)
     and applies the same watermark cutoff as s03."""
     prepare(spark)
-    stage = _stage_once(
+    stage = scratch.stage_once(
         sf_dir,
         "documents",
-        read_table(spark, sf_dir, "documents").select(
+        "documents",
+        lambda p: read_table(spark, sf_dir, "documents")
+        .select(
             "doc_id",
             F.expr("timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,doc_id,0)")
             .alias("ts"),
             "text",
-        ),
+        )
+        .coalesce(4)
+        .write.mode("overwrite")
+        .parquet(p),
     )
-    name = f"s04_sink_{next(_RUN_IDS)}_{os.getpid()}"
     out = streaming_term_counts(
         read_document_stream(spark, stage), window="1 hour", watermark="2 hours"
     )
-    with _stream_shuffle_scope(spark, stage):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    name = _run_append(out, "s04_sink", stage=stage)
     return (
         spark.table(name)
         .select(F.unix_timestamp("window_start").alias("window_start"), "token", "n")
@@ -303,12 +193,6 @@ ORDER BY window_start, token
 """
 
 
-def _stage_events(spark: SparkSession, sf_dir: str, name: str, df) -> str:
-    stage = _stage_dir(sf_dir, name)
-    df.coalesce(4).write.mode("overwrite").parquet(stage)
-    return stage
-
-
 def _run_append(
     out,
     name_prefix: str,
@@ -316,13 +200,13 @@ def _run_append(
     want_query: bool = False,
     stage: str | None = None,
 ):
-    name = f"{name_prefix}_{next(_RUN_IDS)}_{os.getpid()}"
+    name = f"{name_prefix}_{next(_RUN_IDS)}"
 
     def _start():
         q = (
             out.writeStream.format("memory")
             .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
+            .option("checkpointLocation", scratch.checkpoint(name))
             .outputMode(mode)
             .trigger(availableNow=True)
             .start()
@@ -349,9 +233,8 @@ def s05_stream_static_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from hive_udf_neologd_spark.streaming.term_counts import read_event_stream
 
-    stage = _stage_events(
-        spark, sf_dir, "events_s05", read_table(spark, sf_dir, "events")
-    )
+    stage = scratch.fresh(sf_dir, "events_s05")
+    read_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(stage)
     cust = F.broadcast(
         read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
@@ -402,7 +285,8 @@ def s06_streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_neologd_spark.streaming.term_counts import read_event_stream
 
     ev = read_table(spark, sf_dir, "events")
-    stage = _stage_events(spark, sf_dir, "events_s06", ev.unionByName(ev))
+    stage = scratch.fresh(sf_dir, "events_s06")
+    ev.unionByName(ev).coalesce(4).write.mode("overwrite").parquet(stage)
     out = (
         read_event_stream(spark, stage)
         .withWatermark("ts", "2 hours")
@@ -434,9 +318,8 @@ def s07_stateful_running_totals_e2e(spark: SparkSession, sf_dir: str) -> DataFra
         streaming_user_running_totals,
     )
 
-    stage = _stage_events(
-        spark, sf_dir, "events_s07", read_table(spark, sf_dir, "events")
-    )
+    stage = scratch.fresh(sf_dir, "events_s07")
+    read_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(stage)
     src = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -472,9 +355,8 @@ def s08_stream_stream_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles both streams once on user_id.  Epochs via unix_timestamp /
     floor(epoch(...)) — both truncate the sub-second part identically."""
     prepare(spark)
-    stage = _stage_events(
-        spark, sf_dir, "events_s08", read_table(spark, sf_dir, "events")
-    )
+    stage = scratch.fresh(sf_dir, "events_s08")
+    read_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(stage)
     views = (
         read_event_stream(spark, stage)
         .filter(F.col("event_type") == "view")
@@ -539,9 +421,8 @@ def s09_sliding_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same cutoff.  Scale: state is windows×keys, 2× tumbling for
     overlap 2 — still watermark-bounded."""
     prepare(spark)
-    stage = _stage_events(
-        spark, sf_dir, "events_s09", read_table(spark, sf_dir, "events")
-    )
+    stage = scratch.fresh(sf_dir, "events_s09")
+    read_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(stage)
     out = (
         read_event_stream(spark, stage)
         .withWatermark("ts", "2 hours")
@@ -590,8 +471,9 @@ def s10_foreachbatch_merge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_neologd_spark.streaming.term_counts import EVENT_SCHEMA
 
     ev = read_table(spark, sf_dir, "events")
-    stage = _stage_events(spark, sf_dir, "events_s10", ev.unionByName(ev))
-    target = _stage_dir(sf_dir, "s10_target")
+    stage = scratch.fresh(sf_dir, "events_s10")
+    ev.unionByName(ev).coalesce(4).write.mode("overwrite").parquet(stage)
+    target = scratch.fresh(sf_dir, "s10_target")
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.dropDuplicates(["event_id"])
@@ -609,7 +491,7 @@ def s10_foreachbatch_merge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = (
         src.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", _checkpoint_dir(f"s10_{os.getpid()}_{next(_RUN_IDS)}"))
+        .option("checkpointLocation", scratch.checkpoint(f"s10_merge_{next(_RUN_IDS)}"))
         .trigger(availableNow=True)
         .start()
     )
@@ -666,7 +548,7 @@ def s11_late_data_drop_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = read_table(spark, sf_dir, "events")
     mx = events.agg(F.max("ts")).first()[0]  # fixture prep, not plan state
-    stage = _stage_dir(sf_dir, "events_s11")
+    stage = scratch.fresh(sf_dir, "events_s11")
     events.coalesce(1).write.mode("overwrite").parquet(stage)
     batch0 = {f for f in os.listdir(stage) if f.endswith(".parquet")}
     # Advancer: one synthetic row AT the corpus max — raises nothing,

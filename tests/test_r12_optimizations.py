@@ -189,14 +189,12 @@ def test_io_input_fixture_staged_once(spark):
     import os
 
     from hive_udf_neologd_spark.operators import io as io_ops
+    from hive_udf_neologd_spark.sources import scratch
 
-    io_ops._STAGED_INPUTS.clear()
+    scratch._STAGED.clear()
     df1 = io_ops.io04_small_file_compaction(spark, SF_DIR)
     rows1 = sorted(map(tuple, df1.collect()))
-    sprayed = (
-        f"{io_ops._stage_root()}/{os.path.basename(SF_DIR)}/"
-        f"events_sprayed_{os.getpid()}"
-    )
+    sprayed = f"{scratch.root()}/{os.path.basename(SF_DIR)}/events_sprayed"
     parts = sorted(glob.glob(f"{sprayed}/*.parquet"))
     assert parts, "sprayed fixture missing after first build"
     mtimes = [os.path.getmtime(p) for p in parts]
@@ -209,7 +207,7 @@ def test_io_input_fixture_staged_once(spark):
     assert [os.path.getmtime(p) for p in parts2] == mtimes  # no rewrite
 
     # A fingerprint mismatch (regenerated sf_dir) must restage.
-    io_ops._STAGED_INPUTS[sprayed] = ("stale",)
+    scratch._STAGED[sprayed] = ("stale",)
     io_ops.io04_small_file_compaction(spark, SF_DIR)
     parts3 = sorted(glob.glob(f"{sprayed}/*.parquet"))
     assert [os.path.getmtime(p) for p in parts3] != mtimes  # rewritten

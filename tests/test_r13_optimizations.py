@@ -256,10 +256,10 @@ def test_scratch_root_space_gate(tmp_path):
     """ADVICE r12 #2: tmpfs is only chosen when it has headroom."""
     import os
 
-    from hive_udf_neologd_spark.sources import scratch_root
+    from hive_udf_neologd_spark.sources import scratch
 
     if os.path.isdir("/dev/shm"):
         st = os.statvfs("/dev/shm")
         free = st.f_bavail * st.f_frsize
-        assert scratch_root("x", free // 2) == "/dev/shm/x"
-        assert scratch_root("x", free * 2 + (1 << 30)) == "/tmp/x"
+        assert scratch._base(free // 2) == "/dev/shm"
+        assert scratch._base(free * 2 + (1 << 30)) == "/tmp"

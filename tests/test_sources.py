@@ -137,3 +137,107 @@ def test_local_frame_turns_on_arrow_itself(spark):
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
     assert sorted(df.collect()) == [(1, "a"), (2, "b")]
+
+
+def _one_table_sf(sf_dir):
+    """A minimal sf dir holding one source table, ``t.parquet``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf_dir.mkdir()
+    pq.write_table(pa.table({"k": [1, 2, 3]}), sf_dir / "t.parquet")
+    return str(sf_dir)
+
+
+def test_scratch_root_pinned_per_process(monkeypatch, tmp_path):
+    """The scratch root is decided once per process: tmpfs losing its
+    headroom after the first probe moves neither a streaming checkpoint
+    nor a staged fixture, and the fixture is not restaged."""
+    import glob
+    import os
+    import shutil
+    import types
+
+    from hive_udf_neologd_spark.sources import scratch
+
+    shm, disk = str(tmp_path / "shm"), str(tmp_path / "disk")
+    real_statvfs = os.statvfs
+    shm_probes = []
+
+    def statvfs(path):
+        if path != shm:
+            return real_statvfs(path)
+        shm_probes.append(path)
+        free = 1 << 40 if len(shm_probes) == 1 else 0  # room once, none after
+        return types.SimpleNamespace(f_bavail=free, f_frsize=1)
+
+    monkeypatch.setattr(os, "statvfs", statvfs)
+    monkeypatch.setattr(scratch, "_BASES", (shm, disk))
+    monkeypatch.setattr(scratch, "_root", None)
+    monkeypatch.setattr(scratch, "_STAGED", {})
+
+    ckpt = scratch.checkpoint("x")
+    assert ckpt.startswith(f"{shm}/")
+    assert scratch.checkpoint("x") == ckpt
+
+    sf_dir = _one_table_sf(tmp_path / "sf")
+    writes = []
+
+    def write(path):
+        writes.append(path)
+        os.makedirs(path, exist_ok=True)
+        shutil.copy(f"{sf_dir}/t.parquet", f"{path}/part-0.parquet")
+
+    first = scratch.stage_once(sf_dir, "t_copy", "t", write)
+    parts = sorted(glob.glob(f"{first}/*.parquet"))
+    assert parts
+    mtimes = [os.stat(p).st_mtime_ns for p in parts]
+    second = scratch.stage_once(sf_dir, "t_copy", "t", write)
+    assert second == first
+    assert sorted(glob.glob(f"{second}/*.parquet")) == parts
+    assert [os.stat(p).st_mtime_ns for p in parts] == mtimes  # no restage
+    assert writes == [first]
+
+
+def test_scratch_root_removed_at_exit(tmp_path):
+    """A process removes its own scratch directory when it exits normally,
+    and leaves a directory named after another pid alone."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    base = tmp_path / "base"
+    sibling = base / "spark_graft" / str(os.getpid())
+    sibling.mkdir(parents=True)
+    (sibling / "keep").write_text("another process's file")
+    sf_dir = _one_table_sf(tmp_path / "sf")
+
+    script = textwrap.dedent(
+        f"""
+        import os
+        import shutil
+
+        from hive_udf_neologd_spark.sources import scratch
+
+        scratch._BASES = ({str(base)!r},)
+        for path in (scratch.fresh({sf_dir!r}, "f"), scratch.checkpoint("q")):
+            os.makedirs(path)
+        scratch.stage_once({sf_dir!r}, "t_copy", "t", lambda p: shutil.copytree({sf_dir!r}, p))
+        print(os.getpid(), scratch.root(), len(os.listdir(scratch.root())))
+        """
+    )
+    repo = Path(__file__).resolve().parents[1]
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (str(repo), os.environ.get("PYTHONPATH")) if p
+    )}
+    done = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=120, check=True,
+    )
+    pid, root, n_entries = done.stdout.split()[-3:]
+    assert root == f"{base}/spark_graft/{pid}"
+    assert int(n_entries) == 2  # <sf basename>/ and ckpt/ were there at exit
+    assert not os.path.exists(root)
+    assert (sibling / "keep").is_file()
