@@ -16,35 +16,25 @@ fold left-to-right over identical doubles.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from hive_udf_neologd_spark.operators.dedup import _cosine_expr
 from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import local_frame, read_table
 
 _QUERY_MOD = 100  # vec_id % 100 == 0 → query set
 _TOP_K = 5
 _N_PLANES = 8
+_EMB_DIM = 64  # embeddings table contract (TESTDATA.md)
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Norm hoisted into a column: each pairwise cosine then needs only the
-    # dot product (higher-order functions are interpreted, so halving the
-    # per-pair fold work matters).  sqrt(Σx²) here is the exact expression
-    # _cosine_expr folds, so dot/(na·nb) is bit-identical to the oracle's
-    # list_cosine_similarity.
-    return read_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    ).withColumn(
-        "nrm",
-        F.expr(
-            "sqrt(aggregate(transform(e, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
-        ),
+# --- embedding math --------------------------------------------------------
+def _norm_expr(col: str) -> F.Column:
+    return F.expr(
+        f"sqrt(aggregate(transform({col}, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
     )
 
 
@@ -54,22 +44,89 @@ def _dot_expr(a: str, b: str) -> F.Column:
     )
 
 
-# --- shared numpy kernels (round 12, guide §4.2) ---------------------------
+def _cosine_expr(a: str, b: str) -> F.Column:
+    """Cosine over array<double> via zip_with + aggregate — all JVM-side
+    builtins, sequential left-fold (bit-compatible with DuckDB's list
+    kernels)."""
+    return _dot_expr(a, b) / (_norm_expr(a) * _norm_expr(b))
+
+
+def _query_cos() -> F.Column:
+    """``_cosine_expr`` of a (query, vector) pair from the norms ``_emb``
+    and ``_queries`` carry."""
+    return _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
+
+
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Norm hoisted into a column: each pairwise cosine then needs only the
+    # dot product (higher-order functions are interpreted, so halving the
+    # per-pair fold work matters).  The norm is the exact expression
+    # _cosine_expr folds, so dot/(na·nb) is bit-identical to the oracle's
+    # list_cosine_similarity.
+    return read_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        "label",
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
+    ).withColumn("nrm", _norm_expr("e"))
+
+
+def _plane_signs(p: int, salt: str = "") -> list[float]:
+    """±1 weight vector for plane p, from md5 parity (odd first hex nibble
+    of md5('{salt}p|i') → +1); a salt gives an index its own planes.  The
+    weights are CONSTANTS, so they're computed here once with hashlib
+    (bit-identical to the engines' md5) and embedded as array literals or
+    kernel matrices — never evaluated per row."""
+    import hashlib
+
+    return [
+        1.0
+        if int(hashlib.md5(f"{salt}{p}|{i}".encode()).hexdigest()[0], 16) % 2 == 1
+        else -1.0
+        for i in range(_EMB_DIM)
+    ]
+
+
+# --- shared numpy kernels (guide §4.2) -------------------------------------
 # Interpreted higher-order functions (aggregate/zip_with) evaluate a
-# closure per array element; the N×K assignment and pairwise-cosine
-# kernels below do the same math as one fused numpy op per DIMENSION,
+# closure per array element; the B×K distance/dot folds and the pairwise
+# cosine below do the same math as one fused numpy op per DIMENSION,
 # which preserves Spark's sequential left fold exactly: accumulating in
 # array order over dims yields the IDENTICAL doubles (((0+x0)+x1)+…)
 # the HOF fold produces, so ranks/ties — and the DuckDB oracle hashes —
-# are unchanged.  This is the bit-parity argument a09 established in
-# round 2; round 12 applies the same kernels to training (a06/a08/a09/
-# a12), sampled assignment (a03/a11) and brute-force scoring (a01/a10).
+# are unchanged.  Users: k-means training (a06/a08/a09/a12), list
+# assignment (a03/a06/a08/a09/a11/a12), a09's rescoring and d06's band
+# signatures (dedup.py).
+
+
+def _cent_arrays(cent_rows):
+    """(c_ids, C): c_id-sorted centroid rows as an int64 (K,) id vector and
+    a float64 (K, dim) matrix."""
+    return (
+        np.array([r[0] for r in cent_rows], dtype=np.int64),
+        np.array([list(r[1]) for r in cent_rows], dtype=np.float64),
+    )
+
+
+def _l2_fold(E: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(B, K) squared euclidean distances from rows of E to rows of C."""
+    d2 = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
+    for d in range(E.shape[1]):  # dim-order fold, HOF parity
+        diff = E[:, d, None] - C[None, :, d]
+        d2 += diff * diff
+    return d2
+
+
+def _dot_fold(E: np.ndarray, W: np.ndarray) -> np.ndarray:
+    """(B, K) dot products of rows of E with rows of W."""
+    dots = np.zeros((E.shape[0], W.shape[0]), dtype=np.float64)
+    for d in range(E.shape[1]):  # dim-order fold, HOF parity
+        dots += E[:, d, None] * W[None, :, d]
+    return dots
 
 
 def _cos_np_udf():
-    """Vectorized pairwise cosine: dim-order fold over the product matrix
-    (a09's kernel, hoisted for reuse by a01/a10/a08-family rescoring)."""
-    import numpy as np
+    """Vectorized pairwise cosine: dim-order fold over the product matrix,
+    the numpy twin of ``_query_cos`` (a09's candidate rescoring)."""
 
     @pandas_udf("double")
     def _cos_np(
@@ -108,32 +165,17 @@ def _assign_np(df: DataFrame, cent_rows, carry: tuple = ()) -> DataFrame:
     Bit-parity: dim-order accumulation == Spark aggregate's left fold;
     ``np.argmin`` returns the FIRST minimum over columns sorted by c_id,
     which is exactly ``min_by(struct(d2, c_id))``."""
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    c_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in cent_rows], dtype=np.float64)  # (K, dim)
-    schema = StructType(
-        [StructField("vec_id", LongType()), StructField("e", ArrayType(DoubleType()))]
-        + [StructField(c, DoubleType()) for c in carry]
-        + [StructField("c_id", LongType()), StructField("d2", DoubleType())]
+    c_ids, C = _cent_arrays(cent_rows)
+    schema = ", ".join(
+        ["vec_id long", "e array<double>", *(f"{c} double" for c in carry),
+         "c_id long", "d2 double"]
     )
 
     def _batches(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            E = np.array(pdf["e"].tolist(), dtype=np.float64)  # (B, dim)
-            d2 = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-            for d in range(E.shape[1]):  # dim-order fold, HOF parity
-                diff = E[:, d, None] - C[None, :, d]
-                d2 += diff * diff
+            d2 = _l2_fold(np.array(pdf["e"].tolist(), dtype=np.float64), C)
             out = pdf[["vec_id", "e", *carry]].copy()
             am = np.argmin(d2, axis=1)
             out["c_id"] = c_ids[am]
@@ -150,36 +192,16 @@ def _assign_cos_np(df: DataFrame, cent_rows) -> DataFrame:
     premultiplied centroid norm; cosine = dot/(cn·nrm) with the dot
     accumulated in dim order (HOF fold parity), and ``np.argmax``
     first-hit over c_id-sorted columns == max_by(struct(a_cos, -c_id))."""
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    c_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in cent_rows], dtype=np.float64)  # (K, dim)
+    c_ids, C = _cent_arrays(cent_rows)
     cn = np.array([r[2] for r in cent_rows], dtype=np.float64)  # (K,)
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("e", ArrayType(DoubleType())),
-            StructField("nrm", DoubleType()),
-            StructField("list_id", LongType()),
-        ]
-    )
+    schema = "vec_id long, e array<double>, nrm double, list_id long"
 
     def _batches(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            E = np.array(pdf["e"].tolist(), dtype=np.float64)  # (B, dim)
+            dot = _dot_fold(np.array(pdf["e"].tolist(), dtype=np.float64), C)
             nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-            dot = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-            for d in range(E.shape[1]):  # dim-order fold, HOF parity
-                dot += E[:, d, None] * C[None, :, d]
             # a_cos = dot / (cn * nrm): same operand order as the HOF
             # column expression (cn·nrm), then one IEEE division.
             a_cos = dot / (cn[None, :] * nrm[:, None])
@@ -188,6 +210,37 @@ def _assign_cos_np(df: DataFrame, cent_rows) -> DataFrame:
             yield out
 
     return df.select("vec_id", "e", "nrm").mapInPandas(_batches, schema)
+
+
+# --- top-k pipeline: candidates → exact rescore → per-query top-k ----------
+def _queries(emb: DataFrame, *extra: F.Column) -> DataFrame:
+    """The query set as (q_id, qe, qn, *extra)."""
+    return emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn"), *extra
+    )
+
+
+def _top_k(cands: DataFrame, cos: F.Column) -> DataFrame:
+    """Score (q_id, vec_id) candidate pairs with ``cos`` and keep each
+    query's ``_TOP_K`` best (tie → min vec_id) as (q_id, neighbor_id, cos,
+    rank); ``cos`` is rounded to 4 dp only after ranking."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
+    return (
+        cands.select("q_id", "vec_id", cos.alias("cos_raw"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= _TOP_K)
+        .select("q_id", F.col("vec_id").alias("neighbor_id"),
+                F.round("cos_raw", 4).alias("cos"), "rank")
+    )
+
+
+def _list_cands(inv: DataFrame, probes: DataFrame) -> DataFrame:
+    """IVF candidates: every vector of each query's probed lists, except
+    the query itself.  The (query, list) probe pairs are broadcast, so the
+    corpus side never shuffles."""
+    return inv.join(F.broadcast(probes), "list_id").filter(
+        F.col("vec_id") != F.col("q_id")
+    )
 
 
 # --- a01: brute-force cosine top-k ----------------------------------------
@@ -200,20 +253,8 @@ def a01_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume.  The interpreted-HOF dot product stays deliberately."""
     prepare(spark)
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    scored = emb.crossJoin(F.broadcast(queries)).filter(F.col("vec_id") != F.col("q_id"))
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        scored.select("q_id", "vec_id", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                F.round("cos_raw", 4).alias("cos"), "rank")
-        .orderBy("q_id", "rank")
-    )
+    scored = emb.crossJoin(F.broadcast(_queries(emb))).filter(F.col("vec_id") != F.col("q_id"))
+    return _top_k(scored, _query_cos()).orderBy("q_id", "rank")
 
 
 A01_SQL = f"""
@@ -236,23 +277,6 @@ ORDER BY q_id, rank
 
 
 # --- a02: LSH-bucketed ANN ------------------------------------------------
-_EMB_DIM = 64  # embeddings table contract (TESTDATA.md)
-
-
-def _plane_signs(p: int) -> list[float]:
-    """±1 weight vector for plane p, from md5 parity (odd first hex nibble
-    of md5('p|i') → +1).  The weights are CONSTANTS, so they're computed
-    here once with hashlib (bit-identical to the engines' md5) and embedded
-    as array literals — the previous formulation evaluated md5 inside the
-    zip_with lambda, i.e. planes×dims×rows times."""
-    import hashlib
-
-    return [
-        1.0 if int(hashlib.md5(f"{p}|{i}".encode()).hexdigest()[0], 16) % 2 == 1 else -1.0
-        for i in range(_EMB_DIM)
-    ]
-
-
 def _signature_expr() -> str:
     """Bucket id: sum over planes of (dot(w_p, e) > 0) << p."""
     parts = []
@@ -269,24 +293,11 @@ def _signature_expr() -> str:
 def a02_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     emb = _emb(spark, sf_dir).withColumn("bucket", F.expr(_signature_expr()))
-    queries = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"), F.col("bucket").alias("qb")
-    )
     cands = emb.join(
-        F.broadcast(queries),
+        F.broadcast(_queries(emb, F.col("bucket").alias("qb"))),
         (F.col("bucket") == F.col("qb")) & (F.col("vec_id") != F.col("q_id")),
     )
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        cands.select("q_id", "vec_id", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                F.round("cos_raw", 4).alias("cos"), "rank")
-        .orderBy("q_id", "rank")
-    )
+    return _top_k(cands, _query_cos()).orderBy("q_id", "rank")
 
 
 def _duck_sig() -> str:
@@ -356,17 +367,15 @@ def _ivf_sampled_parts(spark: SparkSession, sf_dir: str):
         "c_id long, ce array<double>, cn double",
     )
     assigned = _assign_cos_np(emb, cent_rows)
-    q = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    return cents, assigned, q
+    return cents, assigned, _queries(emb)
 
 
-def _ivf_topk_from(cents, assigned, q, nprobe: int) -> DataFrame:
-    """Probe + candidate-rescore + top-k for one nprobe setting over a
-    prebuilt sampled-centroid index (see _ivf_sampled_parts)."""
+def _cos_probes(q: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """Each query's ``nprobe`` highest-cosine lists of the sampled-centroid
+    index (tie → min c_id) as (q_id, qe, qn, list_id, pr), pr being the
+    list's probe rank."""
     wq = Window.partitionBy("q_id").orderBy(F.desc("p_cos"), F.asc("c_id"))
-    probes = (
+    return (
         q.crossJoin(F.broadcast(cents))
         .select(
             "q_id", "qe", "qn", "c_id",
@@ -374,20 +383,14 @@ def _ivf_topk_from(cents, assigned, q, nprobe: int) -> DataFrame:
         )
         .withColumn("pr", F.row_number().over(wq))
         .filter(F.col("pr") <= nprobe)
-        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"))
+        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"), "pr")
     )
-    cands = assigned.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
-    return (
-        cands.select("q_id", "vec_id", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                F.round("cos_raw", 4).alias("cos"), "rank")
-    )
+
+
+def _ivf_topk_from(cents, assigned, q, nprobe: int) -> DataFrame:
+    """Probe + candidate-rescore + top-k for one nprobe setting over a
+    prebuilt sampled-centroid index (see _ivf_sampled_parts)."""
+    return _top_k(_list_cands(assigned, _cos_probes(q, cents, nprobe)), _query_cos())
 
 
 def a03_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,11 +403,11 @@ def a03_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     index; in production the sample would be replaced by a k-means|| pass
     (still driver-small, still broadcast).
 
-    Scale shape: assignment is a broadcast nested-loop over N×K with a
-    map-side partial ``max_by`` (shuffle carries ONE row per vector, not
-    K); the candidate join broadcasts (query, probed-list) pairs, so the
-    big side never shuffles; only candidates (≈ N·nprobe/nlist per query)
-    reach the final top-k window."""
+    Scale shape: assignment is the narrow numpy kernel over the
+    driver-held centroid sample (no join, no exchange); the candidate join
+    broadcasts (query, probed-list) pairs, so the big side never shuffles;
+    only candidates (≈ N·nprobe/nlist per query) reach the final top-k
+    window."""
     prepare(spark)
     cents, assigned, q = _ivf_sampled_parts(spark, sf_dir)
     return _ivf_topk_from(cents, assigned, q, _N_PROBE).orderBy("q_id", "rank")
@@ -586,35 +589,15 @@ def _lloyd_partial_rows(df: DataFrame, cent_rows):
     between iterations is the designed stability boundary, and the
     trained centroids are verified bit-equal to the r12 path at
     sf0.001/0.01/0.1 (tests/test_r13_optimizations.py)."""
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    c_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in cent_rows], dtype=np.float64)  # (K, dim)
-    schema = StructType(
-        [
-            StructField("c_id", LongType()),
-            StructField("cnt", LongType()),
-            StructField("s", ArrayType(DoubleType())),
-        ]
-    )
+    c_ids, C = _cent_arrays(cent_rows)
+    schema = "c_id long, cnt long, s array<double>"
 
     def _batches(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             E = np.array(pdf["e"].tolist(), dtype=np.float64)  # (B, dim)
-            d2 = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-            for d in range(E.shape[1]):  # dim-order fold, HOF parity
-                diff = E[:, d, None] - C[None, :, d]
-                d2 += diff * diff
-            am = np.argmin(d2, axis=1)
+            am = np.argmin(_l2_fold(E, C), axis=1)
             sums = np.zeros((len(c_ids), E.shape[1]), dtype=np.float64)
             np.add.at(sums, am, E)  # row-order accumulation per cluster
             cnt = np.bincount(am, minlength=len(c_ids))
@@ -660,10 +643,6 @@ def _trained_centroid_rows(emb: DataFrame, train: DataFrame | None = None):
         )
     )
     for _ in range(_KM_ITERS):
-        # Round 13: single-stage fused assign+partial-sum kernel — see
-        # _lloyd_partial_rows (was: _assign_np → posexplode → groupBy
-        # (c_id, dim) → round(avg) → collect, a two-stage plan analyzed
-        # fresh per iteration).
         sums: dict = {}
         cnts: dict = {}
         for r in _lloyd_partial_rows(train, cent_rows):
@@ -697,9 +676,10 @@ def a06_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     production).  Deterministic end-to-end: seeds are the fixed sample
     (``vec_id % {_KM_SEED_MOD} == 1``), and recomputed centroids are
     ROUNDED to 4 dp before the next assignment, so the DuckDB oracle can
-    replay both steps bit-for-bit.  Per iteration: one broadcast
-    assignment (no shuffle of the corpus) + one (cluster, dim) partial-avg
-    shuffle.  Output: final cluster sizes and inertia."""
+    replay both steps bit-for-bit.  Per iteration: one single-stage numpy
+    pass that assigns each vector and sums it into its cluster, with no
+    exchange; the driver finishes the K-sized average.  Output: final
+    cluster sizes and inertia."""
     prepare(spark)
     emb = _emb(spark, sf_dir).select("vec_id", "e")
     cents = _trained_centroid_rows(emb)
@@ -715,112 +695,9 @@ def a06_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _km_sql() -> str:
-    assign = """
-  SELECT vec_id, e, c_id, d2 FROM (
-    SELECT emb.vec_id, emb.e, c.c_id,
-           list_aggregate(list_transform(range(1, len(emb.e) + 1),
-                          i -> (emb.e[i] - c.ce[i]) * (emb.e[i] - c.ce[i])), 'sum') AS d2,
-           ROW_NUMBER() OVER (PARTITION BY emb.vec_id ORDER BY
-             list_aggregate(list_transform(range(1, len(emb.e) + 1),
-                            i -> (emb.e[i] - c.ce[i]) * (emb.e[i] - c.ce[i])), 'sum') ASC,
-             c.c_id ASC) AS r
-    FROM emb CROSS JOIN {cents} c
-  ) WHERE r = 1
-"""
-    recompute = """
-  SELECT c_id, list(cx ORDER BY dim) AS ce FROM (
-    SELECT c_id, u.i - 1 AS dim, ROUND(AVG(e[u.i]), 4) AS cx
-    FROM {assigned}, unnest(range(1, len(e) + 1)) AS u(i)
-    GROUP BY c_id, u.i
-  ) GROUP BY c_id
-"""
-    return f"""
-WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-seeds AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id % {_KM_SEED_MOD} = 1),
-a1 AS ({assign.format(cents="seeds")}),
-c1 AS ({recompute.format(assigned="a1")}),
-a2 AS ({assign.format(cents="c1")}),
-c2 AS ({recompute.format(assigned="a2")}),
-fin AS ({assign.format(cents="c2")})
-SELECT c_id AS cluster, COUNT(*) AS n_members, ROUND(SUM(d2), 2) AS inertia
-FROM fin GROUP BY c_id ORDER BY cluster
-"""
-
-
-A06_SQL = _km_sql()
-
-
-# --- a08: IVF-Flat with a TRAINED coarse quantizer ------------------------
-def a08_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """a03's IVF with the production index: coarse centroids come from the
-    distributed k-means pass (a06's two rounded Lloyd iterations) instead
-    of a deterministic sample — the full Faiss-style train → assign →
-    probe → rescore pipeline, every stage oracle-replayed in DuckDB.
-
-    Scale shape mirrors a03 (assignment runs as the narrow numpy kernel,
-    probing broadcasts the centroid set; only candidates reach the top-k
-    window) plus the training cost: per iteration one narrow assignment
-    pass and one (cluster, dim) partial-avg shuffle.  Train on a sample
-    at 100 TB — centroid quality doesn't need every vector, assignment
-    does."""
-    prepare(spark)
-    emb = _emb(spark, sf_dir)
-    # Trained once, driver-held (K-sized): both the inverted-list
-    # assignment kernel and the query probes read the same rows — the
-    # round-11 localCheckpoint dance is unnecessary now that training
-    # materializes through its per-iteration collects.
-    cents = _trained_centroid_rows(emb.select("vec_id", "e"))
-    return _ivf_probe_rescore(emb, cents)
-
-
-def _ivf_probe_rescore(emb: DataFrame, cent_rows) -> DataFrame:
-    """The index-build → probe → exact-rescore tail shared by a08 and a12
-    (identical for any trained centroid set): full-corpus inverted-list
-    assignment (numpy kernel, narrow), per-query top-``_N_PROBE`` lists,
-    exact cosine on candidates only."""
-    cents = _cents_df(emb.sparkSession, cent_rows)
-    inv = _assign_np(emb, cent_rows, carry=("nrm",)).select(
-        "vec_id", "e", "nrm", F.col("c_id").alias("list_id")
-    )
-    q = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    # Probe by the same L2 metric the quantizer was trained with.
-    qd2 = F.expr(
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.asc("qd2"), F.asc("c_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select("q_id", "qe", "qn", "c_id", qd2.alias("qd2"))
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= _N_PROBE)
-        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"))
-    )
-    cands = inv.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        cands.select("q_id", "vec_id", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                F.round("cos_raw", 4).alias("cos"), "rank")
-        .orderBy("q_id", "rank")
-    )
-
-
-def _ivf_trained_sql(train_where: str = "") -> str:
-    """a08's oracle; with ``train_where`` the two Lloyd refinement passes
-    run over that sample of ``emb`` (a12) while seeds and the final
-    inverted-list assignment stay full-corpus."""
-    assign = """
+# DuckDB replay of one Lloyd step: nearest centroid of ``{cents}`` for each
+# vector of ``{src}`` (tie → min c_id), then the 4 dp centroid recompute.
+_ASSIGN_SQL = """
   SELECT vec_id, e, c_id, d2 FROM (
     SELECT emb.vec_id, emb.e, c.c_id,
            list_aggregate(list_transform(range(1, len(emb.e) + 1),
@@ -832,13 +709,89 @@ def _ivf_trained_sql(train_where: str = "") -> str:
     FROM {src} AS emb CROSS JOIN {cents} c
   ) WHERE r = 1
 """
-    recompute = """
+_RECOMPUTE_SQL = """
   SELECT c_id, list(cx ORDER BY dim) AS ce FROM (
     SELECT c_id, u.i - 1 AS dim, ROUND(AVG(e[u.i]), 4) AS cx
     FROM {assigned}, unnest(range(1, len(e) + 1)) AS u(i)
     GROUP BY c_id, u.i
   ) GROUP BY c_id
 """
+
+
+def _lloyd_sql(src: str) -> str:
+    """CTEs ``seeds`` … ``c2``: the two Lloyd iterations of
+    ``_trained_centroid_rows`` over ``src``; ``c2`` holds the trained
+    centroids."""
+    return f"""seeds AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id % {_KM_SEED_MOD} = 1),
+a1 AS ({_ASSIGN_SQL.format(src=src, cents="seeds")}),
+c1 AS ({_RECOMPUTE_SQL.format(assigned="a1")}),
+a2 AS ({_ASSIGN_SQL.format(src=src, cents="c1")}),
+c2 AS ({_RECOMPUTE_SQL.format(assigned="a2")})"""
+
+
+A06_SQL = f"""
+WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+{_lloyd_sql("emb")},
+fin AS ({_ASSIGN_SQL.format(src="emb", cents="c2")})
+SELECT c_id AS cluster, COUNT(*) AS n_members, ROUND(SUM(d2), 2) AS inertia
+FROM fin GROUP BY c_id ORDER BY cluster
+"""
+
+
+# --- a08: IVF-Flat with a TRAINED coarse quantizer ------------------------
+def a08_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """a03's IVF with the production index: coarse centroids come from the
+    distributed k-means pass (a06's two rounded Lloyd iterations) instead
+    of a deterministic sample — the full Faiss-style train → assign →
+    probe → rescore pipeline, every stage oracle-replayed in DuckDB.
+
+    Scale shape mirrors a03 (assignment runs as the narrow numpy kernel,
+    probing broadcasts the centroid set; only candidates reach the top-k
+    window) plus the training cost: per iteration one single-stage
+    assign-and-sum pass with no exchange (a06).  Train on a sample at
+    100 TB — centroid quality doesn't need every vector, assignment
+    does."""
+    prepare(spark)
+    emb = _emb(spark, sf_dir)
+    # Trained once, driver-held (K-sized): both the inverted-list
+    # assignment kernel and the query probes read the same rows.
+    cents = _trained_centroid_rows(emb.select("vec_id", "e"))
+    return _ivf_probe_rescore(emb, cents)
+
+
+def _ivf_probe_rescore(emb: DataFrame, cent_rows, rescore=None) -> DataFrame:
+    """The index-build → probe → exact-rescore tail shared by a08, a09 and
+    a12 (identical for any trained centroid set): full-corpus inverted-list
+    assignment (numpy kernel, narrow), per-query top-``_N_PROBE`` lists,
+    exact cosine on candidates only.  ``rescore`` is that cosine, called
+    on the column names (qe, e, qn, nrm); None is the interpreted fold
+    ``_query_cos``."""
+    cents = _cents_df(emb.sparkSession, cent_rows)
+    inv = _assign_np(emb, cent_rows, carry=("nrm",)).select(
+        "vec_id", "e", "nrm", F.col("c_id").alias("list_id")
+    )
+    # Probe by the same L2 metric the quantizer was trained with.
+    qd2 = F.expr(
+        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
+        " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+    wq = Window.partitionBy("q_id").orderBy(F.asc("qd2"), F.asc("c_id"))
+    probes = (
+        _queries(emb)
+        .crossJoin(F.broadcast(cents))
+        .select("q_id", "qe", "qn", "c_id", qd2.alias("qd2"))
+        .withColumn("pr", F.row_number().over(wq))
+        .filter(F.col("pr") <= _N_PROBE)
+        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"))
+    )
+    cos = _query_cos() if rescore is None else rescore("qe", "e", "qn", "nrm")
+    return _top_k(_list_cands(inv, probes), cos).orderBy("q_id", "rank")
+
+
+def _ivf_trained_sql(train_where: str = "") -> str:
+    """a08's oracle; with ``train_where`` the two Lloyd refinement passes
+    run over that sample of ``emb`` (a12) while seeds and the final
+    inverted-list assignment stay full-corpus."""
     train_cte = (
         f"train AS (SELECT vec_id, e FROM emb WHERE {train_where}),\n"
         if train_where
@@ -847,12 +800,8 @@ def _ivf_trained_sql(train_where: str = "") -> str:
     tsrc = "train" if train_where else "emb"
     return f"""
 WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-{train_cte}seeds AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id % {_KM_SEED_MOD} = 1),
-a1 AS ({assign.format(src=tsrc, cents="seeds")}),
-c1 AS ({recompute.format(assigned="a1")}),
-a2 AS ({assign.format(src=tsrc, cents="c1")}),
-c2 AS ({recompute.format(assigned="a2")}),
-inv AS (SELECT vec_id, e, c_id AS list_id FROM ({assign.format(src="emb", cents="c2")})),
+{train_cte}{_lloyd_sql(tsrc)},
+inv AS (SELECT vec_id, e, c_id AS list_id FROM ({_ASSIGN_SQL.format(src="emb", cents="c2")})),
 q AS (SELECT vec_id AS q_id, e AS qe FROM emb WHERE vec_id % {_QUERY_MOD} = 0),
 probes AS (
   SELECT q_id, list_id FROM (
@@ -884,72 +833,24 @@ ORDER BY q_id, rank
 A08_SQL = _ivf_trained_sql()
 
 
-# --- a09: IVF with a vectorized numpy assignment kernel (production path) --
+# --- a09: a08's IVF with a vectorized numpy rescoring kernel ---------------
 def a09_ivf_np_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """a08's trained IVF with the PRODUCTION hot-path kernels: the N×K
-    centroid assignment and the candidate cosine rescoring run as
-    Arrow-batched numpy inside ``mapInPandas``/``pandas_udf`` instead of
-    interpreted ``zip_with``/``aggregate`` higher-order functions.  At
-    100 TB the assignment kernel dominates IVF cost and interpreted HOFs
-    evaluate a closure per element — the numpy kernel does the same math
-    as one vectorized op per dimension (~10-50× per vector; measured
-    side-by-side with a08 in bench.py).
+    """a08's trained IVF with the candidate rescoring cosine run as an
+    Arrow-batched numpy ``pandas_udf`` (``_cos_np_udf``) instead of the
+    interpreted ``zip_with``/``aggregate`` fold; training, assignment and
+    probing are a08's.  Interpreted HOFs evaluate a closure per element —
+    the numpy kernel does the same math as one vectorized op per
+    dimension (measured side-by-side with a08 in bench.py).
 
     Bit-parity with a08 (and therefore with a08's DuckDB oracle, reused
-    verbatim): accumulation loops over DIMENSIONS in array order (one
-    vectorized (rows × centroids) op per dim), which is the same
-    sequential left fold Spark's ``aggregate`` performs — so distances,
-    cosines, tie-breaks, and hence the final top-k are IDENTICAL doubles,
-    not merely close.  Centroids are collected to the driver and shipped
-    in the kernel closure — the coarse quantizer is driver-small BY
-    DESIGN (Faiss's assumption too); at 100 TB train fixed-K on a
-    sample, never K ∝ N."""
+    verbatim): the dot product accumulates over DIMENSIONS in array order,
+    which is the same sequential left fold Spark's ``aggregate`` performs
+    — so cosines, tie-breaks, and hence the final top-k are IDENTICAL
+    doubles, not merely close."""
     prepare(spark)
     emb = _emb(spark, sf_dir)
-    # Train ONCE: the trained centroids are driver rows (K-sized), feeding
-    # both the assignment kernel closure and the probe join — referencing
-    # a training DataFrame twice would re-run both Lloyd iterations per
-    # consumer.  (Round 12: training itself now runs the same numpy
-    # assignment kernel — see _trained_centroid_rows.)
-    cent_rows = _trained_centroid_rows(emb.select("vec_id", "e"))
-    cents = _cents_df(spark, cent_rows)
-
-    inv = _assign_np(emb, cent_rows, carry=("nrm",)).select(
-        "vec_id", "e", "nrm", F.col("c_id").alias("list_id")
-    )
-
-    q = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    # Probing is K-sized per query — not the hot path; keep a08's plan.
-    qd2 = F.expr(
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.asc("qd2"), F.asc("c_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select("q_id", "qe", "qn", "c_id", qd2.alias("qd2"))
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= _N_PROBE)
-        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"))
-    )
-    cands = inv.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    _cos_np = _cos_np_udf()
-    return (
-        cands.select("q_id", "vec_id", _cos_np("qe", "e", "qn", "nrm").alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"),
-                F.round("cos_raw", 4).alias("cos"), "rank")
-        .orderBy("q_id", "rank")
-    )
+    cents = _trained_centroid_rows(emb.select("vec_id", "e"))
+    return _ivf_probe_rescore(emb, cents, rescore=_cos_np_udf())
 
 
 # --- a07: int8 embedding quantization (storage-compression path) ----------
@@ -1041,13 +942,10 @@ def a10_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     a02/a03 candidate generators and keep this thresholding stage as-is."""
     prepare(spark)
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    scored = emb.crossJoin(F.broadcast(queries)).filter(F.col("vec_id") != F.col("q_id"))
+    scored = emb.crossJoin(F.broadcast(_queries(emb))).filter(F.col("vec_id") != F.col("q_id"))
     # HOF dot kept deliberately — the numpy kernel measured slower here
     # (0.64 → 0.75 s), same Arrow-transfer argument as a01.
-    cos = F.round(_dot_expr("qe", "e") / (F.col("qn") * F.col("nrm")), 4)
+    cos = F.round(_query_cos(), 4)
     return (
         scored.select("q_id", cos.alias("cos"))
         .filter(F.col("cos") >= _RANGE_TAU)
@@ -1086,55 +984,28 @@ def a11_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade-off in a single distributed query.
 
     Scale shape: the expensive, nprobe-INVARIANT work — exact ground
-    truth and the inverted-list assignment — is computed once and
-    ``localCheckpoint``ed (ground truth is queries×k rows; assignment is
-    corpus-sized, the same materialize-once trade a08 makes for its
-    centroids).  Each nprobe branch then only re-probes (tiny broadcast)
-    and re-ranks candidates, and the four branch outputs are one-row
-    aggregates unioned together.  Oracle: DuckDB rebuilds the identical
-    index per nprobe — fully computed, no pinned constants."""
+    truth and the inverted-list assignment — is built once, and each has
+    exactly one consumer, so neither is checkpointed.  One candidate and
+    rescore pass at max(nprobe) serves every nprobe setting, which then
+    only re-ranks its share of those candidates.  Oracle: DuckDB rebuilds
+    the identical index per nprobe — fully computed, no pinned
+    constants."""
     prepare(spark)
-    # Round 13: the exact ground truth is consumed exactly once (the final
-    # left join), so the eager checkpoint + the separate distinct-count
-    # job bought nothing — the n_q recall denominator folds into the
-    # final aggregate as countDistinct(q_id) (every exact row survives a
-    # left join, so the per-nprobe distinct q_id set IS the query set).
-    # Two driver actions fewer per invocation; results bit-identical
-    # (measured, and the oracle recomputes the same denominator).
+    # The n_q recall denominator is countDistinct(q_id) in the final
+    # aggregate: every exact row survives the left join, so the
+    # per-nprobe distinct q_id set IS the query set.
     exact = a01_ann_bruteforce(spark, sf_dir).select("q_id", "neighbor_id")
     cents, assigned, q = _ivf_sampled_parts(spark, sf_dir)
-    # No eager checkpoint of the assignment (round 13): the r12 fused
-    # sweep left it exactly ONE consumer (the candidate join), so the
-    # materialize-once trade no longer applies — inlining drops one
-    # driver action per invocation (identical results, measured).
-    # Round 12 (guide §2.4): ONE candidate/rescore pass at max(nprobe)
-    # replaces the four per-nprobe branch subtrees (4× probe windows,
-    # 4× candidate joins, 4× rescores, 4 joins against ground truth).
     # Each candidate carries its list's probe rank ``pr``; membership in
     # the nprobe-branch is exactly ``pr <= nprobe`` (identical candidate
     # sets — each vector lives in ONE list, and the probe ranking is the
     # branch-invariant part), so exploding the candidate by the nprobe
     # settings and ranking per (nprobe, q_id) reproduces every branch's
     # top-k bit-for-bit from a single pipeline.
-    max_np = max(_A11_NPROBES)
-    wq = Window.partitionBy("q_id").orderBy(F.desc("p_cos"), F.asc("c_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id", "qe", "qn", "c_id",
-            (_dot_expr("ce", "qe") / (F.col("cn") * F.col("qn"))).alias("p_cos"),
-        )
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= max_np)
-        .select("q_id", "qe", "qn", F.col("c_id").alias("list_id"), "pr")
-    )
-    cands = assigned.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    cos = _dot_expr("qe", "e") / (F.col("qn") * F.col("nrm"))
+    cands = _list_cands(assigned, _cos_probes(q, cents, max(_A11_NPROBES)))
     np_arr = F.array(*[F.lit(n) for n in _A11_NPROBES])
     branched = (
-        cands.select("q_id", "vec_id", "pr", cos.alias("cos_raw"))
+        cands.select("q_id", "vec_id", "pr", _query_cos().alias("cos_raw"))
         .select("q_id", "vec_id", "pr", "cos_raw", F.explode(np_arr).alias("nprobe"))
         .filter(F.col("pr") <= F.col("nprobe"))
     )
@@ -1196,14 +1067,15 @@ def a12_ivf_sampled_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     fix SCALING.md prescribes for real scale (VERDICT r7 next-round #6):
     centroid quality doesn't need every vector, assignment does.  Seeds
     match a08's exact deterministic set (a seed whose sampled cell comes up
-    empty is dropped by the refinement groupBy, so K can shrink on
-    pathological samples — the oracle mirrors the same drop, and on the
-    driver data every seed attracts sample vectors), but each iteration's
-    broadcast-assignment pass runs over only ``vec_id % {mod} == 1`` (~25%)
-    — at sf1 that is the dominant a08 cost (two full-corpus passes), so
-    training drops ~4× while the index/probe/rescore tail is identical in
-    shape and plan to a08.  At 100 TB the sample is a fixed-size frame and
-    training cost decouples from corpus size entirely.
+    empty is dropped in the driver merge of the per-cluster partial sums,
+    so K can shrink on pathological samples — the oracle's GROUP BY
+    mirrors the same drop, and on the driver data every seed attracts
+    sample vectors), but each iteration's assignment pass runs over only
+    ``vec_id % _TRAIN_MOD == 1`` (~25%) — at sf1 that is the dominant a08
+    cost (two full-corpus passes), so training drops ~4× while the
+    index/probe/rescore tail is identical in shape and plan to a08.  At
+    100 TB the sample is a fixed-size frame and training cost decouples
+    from corpus size entirely.
 
     Deterministic end-to-end (fixed sample + 4 dp centroid rounding), so
     the DuckDB oracle replays sampled training bit-for-bit — assignment

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hive_udf_neologd_spark.operators.ann import _cosine_expr, _dot_fold, _plane_signs
 from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import read_table
 
@@ -512,85 +513,30 @@ ORDER BY id_a, id_b
 _COS_THRESHOLD = 0.999
 
 
-def _cosine_expr(a: str, b: str) -> F.Column:
-    """Cosine over array<double> via zip_with + aggregate — all JVM-side
-    builtins, sequential left-fold (bit-compatible with DuckDB's list
-    kernels)."""
-    dot = F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    na = F.expr(
-        f"sqrt(aggregate(transform({a}, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
-    )
-    nb = F.expr(
-        f"sqrt(aggregate(transform({b}, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
-    )
-    return dot / (na * nb)
-
-
-_D6_DIM = 64  # embeddings table contract (TESTDATA.md)
+# 8 bits/band → 256 buckets, so per-(label, band, bucket) occupancy — and
+# with it candidate-pair volume — stays small; fewer, wider bands beat many
+# narrow ones once the threshold is this high (θ ≈ 2.6°).
 _D6_PLANES = 24
 _D6_BANDS = 3  # 8 bits per band
 _D6_BAND_BITS = _D6_PLANES // _D6_BANDS
 
 
-def _d6_plane_signs(p: int) -> list[float]:
-    """±1 hyperplane weights from md5 parity — constants computed once here
-    (hashlib) and embedded as array literals, same scheme as a02's planes
-    (ann.py) but an independent salt so the two indexes stay decoupled."""
-    import hashlib
-
-    return [
-        1.0 if int(hashlib.md5(f"d6|{p}|{i}".encode()).hexdigest()[0], 16) % 2 == 1 else -1.0
-        for i in range(_D6_DIM)
-    ]
-
-
-def _d6_band_bucket(band: int) -> str:
-    """Bucket for one band: the band's plane sign bits packed into an int.
-    8 bits/band → 256 buckets, so per-(label, band, bucket) occupancy — and
-    with it candidate-pair volume — stays small; fewer, wider bands beat
-    many narrow ones once the threshold is this high (θ ≈ 2.6°)."""
-    parts = []
-    for k in range(_D6_BAND_BITS):
-        p = _D6_BAND_BITS * band + k
-        w = ", ".join(f"CAST({v} AS DOUBLE)" for v in _d6_plane_signs(p))
-        dot = (
-            f"aggregate(zip_with(e, array({w}), (x, s) -> x * s),"
-            " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        parts.append(f"(CASE WHEN ({dot}) > 0 THEN {1 << k} ELSE 0 END)")
-    return " + ".join(parts)
-
-
 def _d6_bands_np(doubled: DataFrame) -> DataFrame:
     """(vec_id, label, band, bucket) LSH band table as a NARROW numpy
-    ``mapInPandas`` kernel (round 12, guide §4.2): the 24 hyperplane dots
-    per vector ran as interpreted ``aggregate(zip_with(...))`` folds —
-    a closure call per (plane, dim, row).  The kernel computes the same
-    dots with one fused (B, planes) op per dimension, accumulated in dim
-    order (the HOF left fold, bit-identical doubles), packs the sign bits
-    per band with integer ops, and emits the three band rows directly —
-    same rows the posexplode produced, no shuffle either way."""
+    ``mapInPandas`` kernel (guide §4.2): the 24 hyperplane dots per vector
+    are one fused (B, planes) op per dimension (``ann._dot_fold``, the HOF
+    left fold's bit-identical doubles) instead of an interpreted closure
+    call per (plane, dim, row).  The kernel packs the sign bits of band
+    b's planes 8b … 8b+7 into its bucket least significant bit first and
+    emits the three band rows directly, with no shuffle."""
     import numpy as np
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
+    # Salted, so d06's hyperplanes are independent of a02's.
     W = np.array(
-        [_d6_plane_signs(p) for p in range(_D6_PLANES)], dtype=np.float64
+        [_plane_signs(p, salt="d6|") for p in range(_D6_PLANES)], dtype=np.float64
     )  # (planes, dim)
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("label", doubled.schema["label"].dataType),
-            StructField("band", IntegerType()),
-            StructField("bucket", IntegerType()),
-        ]
-    )
+    label_type = doubled.schema["label"].dataType.simpleString()
+    schema = f"vec_id long, label {label_type}, band int, bucket int"
 
     def _batches(batches):
         import pandas as pd
@@ -599,10 +545,7 @@ def _d6_bands_np(doubled: DataFrame) -> DataFrame:
             if not len(pdf):
                 continue
             E = np.array(pdf["e"].tolist(), dtype=np.float64)  # (B, dim)
-            dots = np.zeros((E.shape[0], _D6_PLANES), dtype=np.float64)
-            for d in range(E.shape[1]):  # dim-order fold, HOF parity
-                dots += E[:, d, None] * W[None, :, d]
-            bits = dots > 0  # (B, planes)
+            bits = _dot_fold(E, W) > 0  # (B, planes)
             out_frames = []
             for b in range(_D6_BANDS):
                 bucket = np.zeros(E.shape[0], dtype=np.int64)

@@ -535,9 +535,11 @@ class UserDictionary:
 
 def fetch_user_dict_url(url: str) -> list[str]:
     """Driver-side fetch of a user-dictionary URL with reference parity:
-    gzip accept-encoding, 10 s connect (urllib: single timeout covers
-    connect+read; we take the stricter read bound), 60 s read, non-200 →
-    error, 32 MiB cap, strict UTF-8 (KuromojiNEologdUDF.java:251-304)."""
+    gzip accept-encoding, 60 s read, non-200 → error, 32 MiB cap, strict
+    UTF-8 (KuromojiNEologdUDF.java:251-304).  urllib takes one timeout for
+    connect and read, so the 60 s read bound is passed and covers both:
+    a connect can wait up to 60 s where the reference gives up after
+    its 10 s connect bound."""
     if not (url.startswith("http://") or url.startswith("https://")):
         raise UserDictionaryError(f"unsupported user dictionary URL scheme: {url!r}")
     req = urllib.request.Request(url, headers={"Accept-Encoding": "gzip"})

@@ -96,6 +96,54 @@ def test_trained_centroid_rows_shape(spark):
     )
 
 
+def test_d6_bands_np_matches_rowwise_reference(spark):
+    """d06's LSH band table against the scheme spelled out row by row:
+    plane p's weight on dim i is +1 when the first hex nibble of
+    md5('d6|p|i') is odd, else -1; a bit is set when the dim-order dot
+    is strictly > 0; band b packs planes 8b … 8b+7, least significant
+    bit first."""
+    import hashlib
+    import random
+
+    from hive_udf_neologd_spark.operators import dedup
+
+    dim, planes, bands, bits = 64, 24, 3, 8
+    signs = [
+        [
+            1.0 if int(hashlib.md5(f"d6|{p}|{i}".encode()).hexdigest()[0], 16) % 2 else -1.0
+            for i in range(dim)
+        ]
+        for p in range(planes)
+    ]
+    rng = random.Random(12)
+    vecs = [
+        [1.0 if i == 0 else 0.0 for i in range(dim)],
+        [1.0 if i == 37 else 0.0 for i in range(dim)],
+        [0.0] * dim,  # every dot is 0 → every bit 0
+    ] + [[rng.uniform(-1.0, 1.0) for _ in range(dim)] for _ in range(5)]
+    rows = [(vec_id, vec_id % 3, e) for vec_id, e in enumerate(vecs)]
+
+    expected = set()
+    for vec_id, label, e in rows:
+        for b in range(bands):
+            bucket = 0
+            for k in range(bits):
+                dot = 0.0
+                for x, s in zip(e, signs[bits * b + k]):  # dim-order left fold
+                    dot += x * s
+                if dot > 0:
+                    bucket |= 1 << k
+            expected.add((vec_id, label, b, bucket))
+
+    df = spark.createDataFrame(rows, "vec_id long, label int, e array<double>")
+    got = {
+        (r["vec_id"], r["label"], r["band"], r["bucket"])
+        for r in dedup._d6_bands_np(df).collect()
+    }
+    assert got == expected
+    assert {(b, bk) for v, _, b, bk in got if v == 2} == {(b, 0) for b in range(bands)}
+
+
 def test_stream_partition_derivation(tmp_path):
     """Scale-adaptive streaming state partitioning: ceil(bytes/advisory)
     clamped to [1, max] — 1 for a tiny staged snapshot, proportional for
