@@ -18,26 +18,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query (SURVEY.md §7): tokenize → explode → groupBy(token)
-    → count → top-20 on sf0.001 documents — exercises source scan, the
-    tokenizer pandas UDF, explode, aggregation, sort and limit."""
-    from pyspark.sql import functions as F
+    """Flagship query (SURVEY.md §7), the catalog's t01: tokenize → explode
+    → groupBy(token) → count → top-20 on sf0.001 documents — exercises
+    source scan, the tokenizer pandas UDF, explode, aggregation, sort and
+    limit."""
+    from hive_udf_neologd_spark.catalog import QUERIES
 
-    from hive_udf_neologd_spark import tokenize_ja
-    from hive_udf_neologd_spark.session import prepare
-    from hive_udf_neologd_spark.sources import read_table
-
-    prepare(spark)
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents")
-    tok = tokenize_ja()
-    return (
-        docs.filter(F.col("text").isNotNull())
-        .select(F.explode(tok("text")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("token"))
-        .limit(20)
-    )
+    return QUERIES["t01_token_topk"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

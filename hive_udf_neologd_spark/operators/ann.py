@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import local_frame, read_table
 
 _QUERY_MOD = 100  # vec_id % 100 == 0 → query set
@@ -251,7 +250,6 @@ def a01_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     every candidate pair would ship two 64-d arrays across the Arrow
     boundary, which costs more than the JVM fold saves at this pair
     volume.  The interpreted-HOF dot product stays deliberately."""
-    prepare(spark)
     emb = _emb(spark, sf_dir)
     scored = emb.crossJoin(F.broadcast(_queries(emb))).filter(F.col("vec_id") != F.col("q_id"))
     return _top_k(scored, _query_cos()).orderBy("q_id", "rank")
@@ -291,7 +289,6 @@ def _signature_expr() -> str:
 
 
 def a02_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     emb = _emb(spark, sf_dir).withColumn("bucket", F.expr(_signature_expr()))
     cands = emb.join(
         F.broadcast(_queries(emb, F.col("bucket").alias("qb"))),
@@ -408,7 +405,6 @@ def a03_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts (query, probed-list) pairs, so the big side never shuffles;
     only candidates (≈ N·nprobe/nlist per query) reach the final top-k
     window."""
-    prepare(spark)
     cents, assigned, q = _ivf_sampled_parts(spark, sf_dir)
     return _ivf_topk_from(cents, assigned, q, _N_PROBE).orderBy("q_id", "rank")
 
@@ -464,7 +460,6 @@ def a04_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the measurement loop an ANN deployment runs when tuning
     nlist/nprobe.  Ground truth and index results are both DataFrames, so
     the comparison is one tiny join; both pipelines execute distributed."""
-    prepare(spark)
     exact = a01_ann_bruteforce(spark, sf_dir).select("q_id", "neighbor_id")
     ivf = a03_ann_ivf(spark, sf_dir).select(
         F.col("q_id").alias("iq"), F.col("neighbor_id").alias("inb")
@@ -503,7 +498,6 @@ def a05_label_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     components are rounded to 4 dp BEFORE the cosine so both engines run
     the cosine over identical doubles.  Scale: one (label, dim) shuffle
     with map-side partial averaging, centroids broadcast back."""
-    prepare(spark)
     emb = _emb(spark, sf_dir)
     dims = emb.select("label", F.posexplode("e").alias("dim", "x"))
     cent = (
@@ -680,7 +674,6 @@ def a06_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass that assigns each vector and sums it into its cluster, with no
     exchange; the driver finishes the K-sized average.  Output: final
     cluster sizes and inertia."""
-    prepare(spark)
     emb = _emb(spark, sf_dir).select("vec_id", "e")
     cents = _trained_centroid_rows(emb)
     # Final stats against the *last recomputed* centroids.
@@ -751,7 +744,6 @@ def a08_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign-and-sum pass with no exchange (a06).  Train on a sample at
     100 TB — centroid quality doesn't need every vector, assignment
     does."""
-    prepare(spark)
     emb = _emb(spark, sf_dir)
     # Trained once, driver-held (K-sized): both the inverted-list
     # assignment kernel and the query probes read the same rows.
@@ -847,7 +839,6 @@ def a09_ivf_np_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the same sequential left fold Spark's ``aggregate`` performs
     — so cosines, tie-breaks, and hence the final top-k are IDENTICAL
     doubles, not merely close."""
-    prepare(spark)
     emb = _emb(spark, sf_dir)
     cents = _trained_centroid_rows(emb.select("vec_id", "e"))
     return _ivf_probe_rescore(emb, cents, rescore=_cos_np_udf())
@@ -863,7 +854,6 @@ def a07_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction error that costs.  Per-vector max-error is
     order-independent; the per-label mean goes through DECIMAL so the
     aggregate matches the oracle bit-for-bit."""
-    prepare(spark)
     emb = read_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -940,7 +930,6 @@ def a10_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same broadcast shape as a01 (query side broadcast, corpus side
     never shuffles for the join); at 100 TB swap the cross join for the
     a02/a03 candidate generators and keep this thresholding stage as-is."""
-    prepare(spark)
     emb = _emb(spark, sf_dir)
     scored = emb.crossJoin(F.broadcast(_queries(emb))).filter(F.col("vec_id") != F.col("q_id"))
     # HOF dot kept deliberately — the numpy kernel measured slower here
@@ -990,7 +979,6 @@ def a11_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     only re-ranks its share of those candidates.  Oracle: DuckDB rebuilds
     the identical index per nprobe — fully computed, no pinned
     constants."""
-    prepare(spark)
     # The n_q recall denominator is countDistinct(q_id) in the final
     # aggregate: every exact row survives the left join, so the
     # per-nprobe distinct q_id set IS the query set.
@@ -1080,7 +1068,6 @@ def a12_ivf_sampled_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic end-to-end (fixed sample + 4 dp centroid rounding), so
     the DuckDB oracle replays sampled training bit-for-bit — assignment
     exactness on the trained centroids, same oracle pattern as a08."""
-    prepare(spark)
     emb = _emb(spark, sf_dir)
     train = emb.select("vec_id", "e").filter(F.col("vec_id") % _TRAIN_MOD == 1)
     cents = _trained_centroid_rows(emb.select("vec_id", "e"), train=train)
@@ -1090,35 +1077,20 @@ def a12_ivf_sampled_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 A12_SQL = _ivf_trained_sql(train_where=f"vec_id % {_TRAIN_MOD} = 1")
 
 
-ANN_QUERIES = {
-    "a01_ann_bruteforce": a01_ann_bruteforce,
-    "a02_ann_lsh": a02_ann_lsh,
-    "a03_ann_ivf": a03_ann_ivf,
-    "a04_ann_recall": a04_ann_recall,
-    "a05_label_centroid_cohesion": a05_label_centroid_cohesion,
-    "a06_kmeans_lloyd": a06_kmeans_lloyd,
-    "a07_int8_quantization": a07_int8_quantization,
-    "a08_ivf_trained": a08_ivf_trained,
-    "a09_ivf_np_kernel": a09_ivf_np_kernel,
-    "a10_range_search": a10_range_search,
-    # Append-only (DRIVER_GATED_50 contract): new entries go at the END.
-    "a11_recall_curve": a11_recall_curve,
-    "a12_ivf_sampled_train": a12_ivf_sampled_train,
-}
-
-ANN_ORACLES = {
-    "a01_ann_bruteforce": A01_SQL,
-    "a02_ann_lsh": A02_SQL,
-    "a03_ann_ivf": A03_SQL,
-    "a04_ann_recall": A04_SQL,
-    "a05_label_centroid_cohesion": A05_SQL,
-    "a06_kmeans_lloyd": A06_SQL,
-    "a07_int8_quantization": A07_SQL,
-    "a08_ivf_trained": A08_SQL,
+CATALOG = {
+    "a01_ann_bruteforce": (a01_ann_bruteforce, A01_SQL),
+    "a02_ann_lsh": (a02_ann_lsh, A02_SQL),
+    "a03_ann_ivf": (a03_ann_ivf, A03_SQL),
+    "a04_ann_recall": (a04_ann_recall, A04_SQL),
+    "a05_label_centroid_cohesion": (a05_label_centroid_cohesion, A05_SQL),
+    "a06_kmeans_lloyd": (a06_kmeans_lloyd, A06_SQL),
+    "a07_int8_quantization": (a07_int8_quantization, A07_SQL),
+    "a08_ivf_trained": (a08_ivf_trained, A08_SQL),
     # a09 computes the same index with numpy kernels — bit-identical to a08,
     # so it is gated by the SAME oracle.
-    "a09_ivf_np_kernel": A08_SQL,
-    "a10_range_search": A10_SQL,
-    "a11_recall_curve": A11_SQL,
-    "a12_ivf_sampled_train": A12_SQL,
+    "a09_ivf_np_kernel": (a09_ivf_np_kernel, A08_SQL),
+    "a10_range_search": (a10_range_search, A10_SQL),
+    # Append-only (DRIVER_GATED_50 contract): new entries go at the END.
+    "a11_recall_curve": (a11_recall_curve, A11_SQL),
+    "a12_ivf_sampled_train": (a12_ivf_sampled_train, A12_SQL),
 }

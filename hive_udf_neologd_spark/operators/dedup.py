@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_udf_neologd_spark.operators.ann import _cosine_expr, _dot_fold, _plane_signs
-from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import read_table
 
 EXACT_OFF = 100000
@@ -98,7 +97,6 @@ def _corpus(spark: SparkSession, sf_dir: str, with_exact: bool = True) -> DataFr
 
 # --- d01: exact dedup (hash groupBy) --------------------------------------
 def d01_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return (
         _corpus(spark, sf_dir)
         .groupBy(F.md5("text").alias("text_hash"))
@@ -223,7 +221,6 @@ def _d02_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def d02_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     # Materialize-before-sort (round 12, same rationale as d05): the
     # declared sort's sampling pass re-ran the pair-dedup aggregate over
     # the distinct's shuffle output once more per action (measured
@@ -282,7 +279,6 @@ def d03_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token count (the r1 plan-audit flag).  Votes and the final sign
     pack are integer math, so the bit-row DuckDB oracle still matches
     exactly."""
-    prepare(spark)
     # Materialize before the sort (round 12, guide §3.3): the range
     # partitioner's sampling pass re-ran the base⋈mut join segment above
     # the aggregate exchanges once more per action (measured ~1.45 ->
@@ -366,7 +362,6 @@ ORDER BY doc_id
 
 # --- d04: token-set Jaccard vs the near-dup copy --------------------------
 def d04_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     base = _base(spark, sf_dir).select("doc_id", F.split("text", " ").alias("ta"))
     mut = _mutated(_base(spark, sf_dir)).select(
         (F.col("doc_id") - MUT_OFF).alias("doc_id"), F.split("text", " ").alias("tb")
@@ -434,7 +429,6 @@ def d05_bucket_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     order stays; on a natural-vocabulary corpus the df order is the right
     call and the swap is a drop-in (any fixed total order satisfies the
     completeness theorem)."""
-    prepare(spark)
     # Materialize the scored pairs BEFORE the presentation sort (round 12,
     # guide §3.3/§7.2): a global orderBy plans a range exchange whose
     # partitioner SAMPLES its child, and with no exchange between the
@@ -583,7 +577,6 @@ def d06_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the join key is (label, band, bucket) with candidate
     volume ∝ bucket occupancy, not bucket-pair count; vectors are fetched
     per candidate pair by keyed join — no O(n²) stage anywhere."""
-    prepare(spark)
     # Same materialize-before-sort shape as d05 (round 12): the range
     # exchange's sampling pass otherwise re-executes the fetch joins and
     # the 64-d cosine folds per action (measured: 1.3 -> ~1.0 s at
@@ -659,7 +652,6 @@ def d07_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     at {_MAX_CC_ITERS}.  The DuckDB oracle computes the same fixpoint with
     a recursive CTE — the driver thereby gates a genuinely iterative
     distributed algorithm."""
-    prepare(spark)
     labels = _cc_labels(spark, sf_dir)
     return (
         labels.groupBy(F.col("lbl").alias("cluster_root"))
@@ -805,7 +797,6 @@ def d09_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     what gets dropped (member count and character volume — the dedup
     savings a 100 TB ingest reports).  One keyed join of labels to the
     corpus, then a small per-cluster aggregate."""
-    prepare(spark)
     labels = _cc_labels(spark, sf_dir)
     corpus = _corpus(spark, sf_dir, with_exact=False).select("doc_id", "text")
     return (
@@ -850,7 +841,6 @@ def d08_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a left-anti join — only genuinely new content survives.  At
     100 TB the corpus side is a bucketed hash index, making this a
     co-located anti join; counts per lang summarize the admission."""
-    prepare(spark)
     existing = _base(spark, sf_dir).select(F.md5("text").alias("h"))
     batch = _base(spark, sf_dir).unionByName(_mutated(_base(spark, sf_dir)))
     admitted = (
@@ -904,7 +894,6 @@ def d10_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id ranges: batch ids sit at +{MUT_OFF}).  Filter-splitting the
     un-materialized union would have re-run the whole pipeline per side —
     the checkpoint is what makes the single pass real."""
-    prepare(spark)
     base = _base(spark, sf_dir)
     batch = _mutated(base).filter((F.col("doc_id") - MUT_OFF) % 3 == 0)
     bands = _minhash_bands(
@@ -1009,7 +998,6 @@ def d11_benchmark_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     a same-shaped Bloom filter with identical topology (false positives
     then get an exact recheck on the candidate subset).
     """
-    prepare(spark)
     base = _base(spark, sf_dir)
     toks = base.select("doc_id", "lang", F.split("text", " ").alias("ts"))
     ev = (
@@ -1086,30 +1074,16 @@ GROUP BY d.lang ORDER BY d.lang
 """
 
 
-DEDUP_QUERIES = {
-    "d01_dedup_exact": d01_dedup_exact,
-    "d02_minhash_lsh_pairs": d02_minhash_lsh_pairs,
-    "d03_simhash": d03_simhash,
-    "d04_jaccard_near_dup": d04_jaccard_near_dup,
-    "d05_bucket_jaccard_pairs": d05_bucket_jaccard_pairs,
-    "d06_embedding_dup_pairs": d06_embedding_dup_pairs,
-    "d07_dup_clusters": d07_dup_clusters,
-    "d08_incremental_ingest": d08_incremental_ingest,
-    "d09_cluster_canonical": d09_cluster_canonical,
-    "d10_incremental_near_dup": d10_incremental_near_dup,
-    "d11_benchmark_decontaminate": d11_benchmark_decontaminate,
-}
-
-DEDUP_ORACLES = {
-    "d01_dedup_exact": D01_SQL,
-    "d02_minhash_lsh_pairs": D02_SQL,
-    "d03_simhash": D03_SQL,
-    "d04_jaccard_near_dup": D04_SQL,
-    "d05_bucket_jaccard_pairs": D05_SQL,
-    "d06_embedding_dup_pairs": D06_SQL,
-    "d07_dup_clusters": D07_SQL,
-    "d08_incremental_ingest": D08_SQL,
-    "d09_cluster_canonical": D09_SQL,
-    "d10_incremental_near_dup": D10_SQL,
-    "d11_benchmark_decontaminate": D11_SQL,
+CATALOG = {
+    "d01_dedup_exact": (d01_dedup_exact, D01_SQL),
+    "d02_minhash_lsh_pairs": (d02_minhash_lsh_pairs, D02_SQL),
+    "d03_simhash": (d03_simhash, D03_SQL),
+    "d04_jaccard_near_dup": (d04_jaccard_near_dup, D04_SQL),
+    "d05_bucket_jaccard_pairs": (d05_bucket_jaccard_pairs, D05_SQL),
+    "d06_embedding_dup_pairs": (d06_embedding_dup_pairs, D06_SQL),
+    "d07_dup_clusters": (d07_dup_clusters, D07_SQL),
+    "d08_incremental_ingest": (d08_incremental_ingest, D08_SQL),
+    "d09_cluster_canonical": (d09_cluster_canonical, D09_SQL),
+    "d10_incremental_near_dup": (d10_incremental_near_dup, D10_SQL),
+    "d11_benchmark_decontaminate": (d11_benchmark_decontaminate, D11_SQL),
 }

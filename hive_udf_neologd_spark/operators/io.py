@@ -28,7 +28,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import read_csv, read_json, read_table, scratch
 
 ORDERS_CSV_SCHEMA = StructType(
@@ -47,7 +46,6 @@ def io01_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECLARED schema → monthly revenue.  Doubles survive CSV via Spark's
     shortest-round-trip float formatting; the oracle aggregates the
     original parquet, so the compare proves lossless round-trip."""
-    prepare(spark)
     stage = scratch.fresh(sf_dir, "orders_csv")
     (
         read_table(spark, sf_dir, "orders")
@@ -99,7 +97,6 @@ def io02_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp type, so encode explicitly rather than trusting string
     formatting) → read back with a declared schema → per-type stats over a
     reconstructed event-time column."""
-    prepare(spark)
     stage = scratch.fresh(sf_dir, "events_json")
     (
         read_table(spark, sf_dir, "events")
@@ -146,7 +143,6 @@ def io03_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     files (the plan's PartitionFilters prune the rest at planning time;
     directory listing, not data scan — asserted in tests/test_plans.py).
     Hourly revenue for purchases only."""
-    prepare(spark)
     stage = scratch.stage_once(
         sf_dir,
         "events_by_type",
@@ -192,7 +188,6 @@ def io04_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-checked (the aggregate proves the rewrite lost nothing)."""
     from hive_udf_neologd_spark.sources import compact_parquet
 
-    prepare(spark)
     sprayed = scratch.stage_once(
         sf_dir,
         "events_sprayed",
@@ -242,7 +237,6 @@ def io05_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch boundaries, so production tables pin the merged schema in a
     metastore after each evolution instead of re-merging per query; the
     read itself stays fully parallel."""
-    prepare(spark)
     ev = read_table(spark, sf_dir, "events")
 
     def _write_epochs(root: str) -> None:
@@ -287,18 +281,10 @@ FROM evolved GROUP BY epoch, event_type ORDER BY epoch, event_type
 """
 
 
-IO_QUERIES = {
-    "io01_csv_roundtrip": io01_csv_roundtrip,
-    "io02_json_roundtrip": io02_json_roundtrip,
-    "io03_partition_pruned_read": io03_partition_pruned_read,
-    "io04_small_file_compaction": io04_small_file_compaction,
-    "io05_schema_evolution_read": io05_schema_evolution_read,
-}
-
-IO_ORACLES = {
-    "io01_csv_roundtrip": IO01_SQL,
-    "io02_json_roundtrip": IO02_SQL,
-    "io03_partition_pruned_read": IO03_SQL,
-    "io04_small_file_compaction": IO04_SQL,
-    "io05_schema_evolution_read": IO05_SQL,
+CATALOG = {
+    "io01_csv_roundtrip": (io01_csv_roundtrip, IO01_SQL),
+    "io02_json_roundtrip": (io02_json_roundtrip, IO02_SQL),
+    "io03_partition_pruned_read": (io03_partition_pruned_read, IO03_SQL),
+    "io04_small_file_compaction": (io04_small_file_compaction, IO04_SQL),
+    "io05_schema_evolution_read": (io05_schema_evolution_read, IO05_SQL),
 }

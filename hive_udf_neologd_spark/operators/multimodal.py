@@ -30,7 +30,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import read_table
 
 # Schema for a multimodal asset table: opaque payload + typed metadata.
@@ -162,7 +161,6 @@ def synthetic_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- m01: binary metadata (oracle-gated slice of the plumbing) ------------
 def m01_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     payload = F.encode("text", "UTF-8")
     return (
@@ -197,7 +195,6 @@ def m02_decoded_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays the stub decode arithmetic in SQL (byte-length
     derived fakes), so batching/schema bugs in the Python path surface as
     value mismatches."""
-    prepare(spark)
     assets = synthetic_assets(spark, sf_dir)
     return (
         decode_assets(assets)
@@ -249,7 +246,6 @@ def m03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: explode is narrow (no shuffle); per-asset frame counts are
     bounded by ``n_frames / step``, so the one aggregation shuffle carries
     sampled frames only, not full frame inventories."""
-    prepare(spark)
     assets = synthetic_assets(spark, sf_dir)
     frames = (
         decode_assets(assets)
@@ -301,7 +297,6 @@ def m04_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact.  The actual pixel resample would run in the same Pandas-UDF
     slot as the decode stub; this query is the planning/metadata half that
     drives it.  Narrow end-to-end except the tiny final aggregation."""
-    prepare(spark)
     decoded = decode_assets(synthetic_assets(spark, sf_dir)).filter(
         F.col("kind") == "image"
     )
@@ -350,7 +345,6 @@ def m05_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-kind totals.  Narrow until the tiny final aggregate; the actual
     byte slicing would use ``substring(payload, off, len)`` in the same
     projection."""
-    prepare(spark)
     assets = synthetic_assets(spark, sf_dir)
     chunks = assets.select(
         "asset_id",
@@ -397,18 +391,10 @@ FROM chunks GROUP BY kind ORDER BY kind
 """
 
 
-MM_QUERIES = {
-    "m01_binary_meta": m01_binary_meta,
-    "m02_decoded_meta_stats": m02_decoded_meta_stats,
-    "m03_frame_sample": m03_frame_sample,
-    "m04_resize_plan": m04_resize_plan,
-    "m05_chunk_plan": m05_chunk_plan,
-}
-
-MM_ORACLES = {
-    "m01_binary_meta": M01_SQL,
-    "m02_decoded_meta_stats": M02_SQL,
-    "m03_frame_sample": M03_SQL,
-    "m04_resize_plan": M04_SQL,
-    "m05_chunk_plan": M05_SQL,
+CATALOG = {
+    "m01_binary_meta": (m01_binary_meta, M01_SQL),
+    "m02_decoded_meta_stats": (m02_decoded_meta_stats, M02_SQL),
+    "m03_frame_sample": (m03_frame_sample, M03_SQL),
+    "m04_resize_plan": (m04_resize_plan, M04_SQL),
+    "m05_chunk_plan": (m05_chunk_plan, M05_SQL),
 }

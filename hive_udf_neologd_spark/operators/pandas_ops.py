@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import read_table
 
 
@@ -34,7 +33,6 @@ def u01_applyinpandas_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly.  rank/n is rounded on the JVM: SQL ``ROUND`` rounds a tie
     half away from zero (3/800 → 0.0038), where Python's ``round`` on the
     double gives 0.0037.  Top-3 per segment keeps the output small."""
-    prepare(spark)
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -92,7 +90,6 @@ def u02_grouped_agg_kth(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy partition finds the k-th element without a full sort."""
     import numpy as np
 
-    prepare(spark)
     li = read_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
 
     @pandas_udf("double")
@@ -133,12 +130,7 @@ FROM ranked GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
-PANDAS_OPS_QUERIES = {
-    "u01_applyinpandas_rank": u01_applyinpandas_rank,
-    "u02_grouped_agg_kth": u02_grouped_agg_kth,
-}
-
-PANDAS_OPS_ORACLES = {
-    "u01_applyinpandas_rank": U01_SQL,
-    "u02_grouped_agg_kth": U02_SQL,
+CATALOG = {
+    "u01_applyinpandas_rank": (u01_applyinpandas_rank, U01_SQL),
+    "u02_grouped_agg_kth": (u02_grouped_agg_kth, U02_SQL),
 }

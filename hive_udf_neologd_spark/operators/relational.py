@@ -27,13 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import read_table
 
 
 # --- aggregation: partial+final hash agg, filter pushdown (TPC-H Q1-ish) --
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
@@ -77,7 +75,6 @@ ORDER BY l_returnflag, l_linestatus
 
 # --- sort / limit / top-k (deterministic tie-break) -----------------------
 def q02_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return (
         read_table(spark, sf_dir, "orders")
         .select(
@@ -101,7 +98,6 @@ LIMIT 10
 
 # --- shuffle (equi) join + aggregation ------------------------------------
 def q03_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     orders = read_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     return (
@@ -125,7 +121,6 @@ ORDER BY c_mktsegment
 
 # --- broadcast dim joins + ROLLUP ----------------------------------------
 def q04_region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     cust = read_table(spark, sf_dir, "customer").select("c_nationkey", "c_acctbal")
     nation = F.broadcast(read_table(spark, sf_dir, "nation"))
     region = F.broadcast(read_table(spark, sf_dir, "region"))
@@ -153,7 +148,6 @@ ORDER BY r_name, n_name
 
 # --- window: per-group top-k via row_number -------------------------------
 def q05_topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         read_table(spark, sf_dir, "orders")
@@ -181,7 +175,6 @@ ORDER BY o_custkey, rn
 
 # --- window: running aggregate + lag --------------------------------------
 def q06_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         read_table(spark, sf_dir, "orders")
@@ -209,7 +202,6 @@ ORDER BY o_custkey, o_orderkey
 
 # --- distinct aggregation -------------------------------------------------
 def q07_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return (
         read_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -231,7 +223,6 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 
 # --- set operations -------------------------------------------------------
 def q08_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     building = (
         read_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -263,7 +254,6 @@ ORDER BY tag, custkey
 
 # --- semi join ------------------------------------------------------------
 def q09_parts_sold_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     part = read_table(spark, sf_dir, "part")
     li = read_table(spark, sf_dir, "lineitem").select("l_partkey")
     return (
@@ -283,7 +273,6 @@ GROUP BY p_brand ORDER BY p_brand
 
 # --- anti join ------------------------------------------------------------
 def q10_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     cust = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders").select("o_custkey")
     return (
@@ -303,7 +292,6 @@ GROUP BY c_mktsegment ORDER BY c_mktsegment
 
 # --- JSON extraction (events.props) ---------------------------------------
 def q11_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     ev = read_table(spark, sf_dir, "events")
     return (
         ev.select(
@@ -328,7 +316,6 @@ ORDER BY event_type, k_bucket
 
 # --- date functions + aggregation -----------------------------------------
 def q12_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     ev = read_table(spark, sf_dir, "events")
     return (
         ev.select(F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type", "value")
@@ -347,7 +334,6 @@ FROM events GROUP BY day, event_type ORDER BY day, event_type
 
 # --- broadcast join fact→dim ----------------------------------------------
 def q13_brand_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
     part = F.broadcast(read_table(spark, sf_dir, "part").select("p_partkey", "p_brand"))
     return (
@@ -370,7 +356,6 @@ GROUP BY p_brand ORDER BY p_brand
 
 # --- CUBE -----------------------------------------------------------------
 def q14_cube_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return (
         read_table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
@@ -391,7 +376,6 @@ ORDER BY l_returnflag, l_linestatus
 
 # --- conditional aggregation ----------------------------------------------
 def q15_priority_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return (
         read_table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
@@ -421,7 +405,6 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 
 # --- join + agg + top-k (revenue per supplier) ----------------------------
 def q16_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = read_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice", "l_discount")
     supp = F.broadcast(read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name"))
     rev = li.groupBy("l_suppkey").agg(
@@ -447,7 +430,6 @@ LIMIT 10
 
 # --- GROUPING SETS (SQL surface) ------------------------------------------
 def q17_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     read_table(spark, sf_dir, "customer").createOrReplaceTempView("gs_customer")
     F.broadcast(read_table(spark, sf_dir, "nation")).createOrReplaceTempView("gs_nation")
     F.broadcast(read_table(spark, sf_dir, "region")).createOrReplaceTempView("gs_region")
@@ -478,7 +460,6 @@ def s01_tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows via F.window — the batch twin of the
     Structured Streaming pipeline in streaming/term_counts.py (same window
     semantics; watermarking only matters on unbounded input)."""
-    prepare(spark)
     ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -505,7 +486,6 @@ def s02_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30 min gap) per user via F.session_window; the
     DuckDB oracle reconstructs identical sessions with a gaps-and-islands
     window query."""
-    prepare(spark)
     ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
@@ -551,7 +531,6 @@ def q18_topk_skew_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/topk.py and SCALING.md)."""
     from hive_udf_neologd_spark.operators.topk import grouped_topk
 
-    prepare(spark)
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_orderkey", "l_linenumber",
         F.round("l_extendedprice", 2).alias("price"),
@@ -578,7 +557,6 @@ ORDER BY l_returnflag, rn
 
 # --- pivot ----------------------------------------------------------------
 def q19_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     orders = read_table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
     return (
@@ -615,7 +593,6 @@ def q20_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the single-pass path is `approx_percentile` (t-digest, partial
     aggregation); this exact variant sorts within each group, which is
     acceptable because only the 3 returnflag groups' ranks survive."""
-    prepare(spark)
     li = read_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
     grp = Window.partitionBy("l_returnflag")
     w = grp.orderBy("l_extendedprice")
@@ -649,7 +626,6 @@ FROM ranked GROUP BY l_returnflag ORDER BY l_returnflag
 
 # --- date arithmetic ------------------------------------------------------
 def q21_date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return (
         read_table(spark, sf_dir, "orders")
         .select(
@@ -681,7 +657,6 @@ def q24_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     through DECIMAL so the result is order-independent and bit-equal to
     the oracle.  Scale: the aggregate side shrinks to one row per part
     before the join, and AQE picks broadcast when it fits."""
-    prepare(spark)
     li = read_table(spark, sf_dir, "lineitem")
     thr = li.groupBy("l_partkey").agg(
         (F.avg("l_quantity") * 0.2).alias("qty_thr")
@@ -722,7 +697,6 @@ def q25_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     seconds (value-based frame, unlike q06's row frame).  DECIMAL
     accumulation makes the frame sum independent of intra-frame order, so
     ties on o_orderdate cannot flip the comparison with the oracle."""
-    prepare(spark)
     orders = read_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -761,7 +735,6 @@ def q26_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: only the two fact joins shuffle, the snowflaked dimension chain
     rides along broadcast; Catalyst orders the joins, AQE re-plans sizes at
     runtime."""
-    prepare(spark)
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -805,7 +778,6 @@ ORDER BY r_name, n_name
 def q27_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NTILE over a total order (price, then key — unique, so both engines
     assign identical tiles), then per-quartile price stats by priority."""
-    prepare(spark)
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -843,7 +815,6 @@ def q28_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``from_json`` with a declared schema (the idiomatic Spark JSON path —
     one parse into a typed struct, unlike q11's per-field
     ``get_json_object``); bucket the extracted value and aggregate."""
-    prepare(spark)
     ev = read_table(spark, sf_dir, "events")
     parsed = ev.select(
         "event_type",
@@ -871,7 +842,6 @@ def q29_conditional_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional-aggregate surface: count_if, bool_and/bool_or, and
     FILTER-style conditional sums — all fold into the same partial-agg
     shuffle as the plain aggregates beside them."""
-    prepare(spark)
     orders = read_table(spark, sf_dir, "orders")
     big = F.col("o_totalprice") > 200000
     return (
@@ -905,7 +875,6 @@ def q30_scalar_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String / date / math / array / map scalars in one narrow projection
     — the §2.3 'scalars' inventory row made executable.  All built-ins,
     whole-stage codegen'd, zero shuffles before the final order."""
-    prepare(spark)
     nation = read_table(spark, sf_dir, "nation")
     return (
         nation.select(
@@ -959,7 +928,6 @@ def q31_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans a plain shuffled-hash/sort-merge semi join — no per-row subquery.
     Scale: the quarter filter pushes down to the orders scan, shrinking the
     probe side before the semi join; lineitem prunes to two columns."""
-    prepare(spark)
     orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1995-04-01")
     )
@@ -996,7 +964,6 @@ def q32_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-part sums (exact under DECIMAL), broadcast as a 1-row cross join —
     at 100 TB the fact table is scanned ONCE; the threshold side reuses the
     already-shuffled per-part aggregate instead of a second scan."""
-    prepare(spark)
     li = read_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("rev_dec")
@@ -1039,7 +1006,6 @@ def q33_rich_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     against filtered orders.  Scale: the anti join shuffles on custkey only
     after the balance filter has cut the customer side; the scalar is one
     broadcast row, not a recomputed subquery per row."""
-    prepare(spark)
     cust = read_table(spark, sf_dir, "customer")
     orders = (
         read_table(spark, sf_dir, "orders")
@@ -1093,7 +1059,6 @@ def q34_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     → the bound holds with wide margin); the oracle emits TRUE.  The sketch
     itself is therefore what the hash gate exercises — a drifting estimate
     flips the boolean and fails the row."""
-    prepare(spark)
     cust = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
     agg = (
@@ -1138,7 +1103,6 @@ def q35_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical shuffle key end-to-end, and the dimension joins in broadcast.
     The canonical product-analytics query a warehouse replaces with three
     correlated subqueries."""
-    prepare(spark)
     ev = read_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     mv = (
         ev.filter(F.col("event_type") == "view")
@@ -1213,7 +1177,6 @@ def q36_calendar_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate and explodes driver-free via sequence(); days are broadcast
     against the (already tiny) daily aggregate, so the only corpus-sized
     stage is the first groupBy."""
-    prepare(spark)
     orders = read_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -1266,7 +1229,6 @@ def q37_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rank-based median hash-matches the DuckDB oracle, and
     ``approx_within_2pct`` asserts |t-digest − exact| / exact ≤ 2 % —
     sketch drift flips the boolean and fails the row."""
-    prepare(spark)
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     j = orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
@@ -1306,82 +1268,42 @@ FROM ranked GROUP BY c_mktsegment ORDER BY c_mktsegment
 """
 
 
-RELATIONAL_QUERIES = {
-    "q01_pricing_summary": q01_pricing_summary,
-    "q02_top_orders": q02_top_orders,
-    "q03_segment_revenue": q03_segment_revenue,
-    "q04_region_nation_rollup": q04_region_nation_rollup,
-    "q05_topk_orders_per_customer": q05_topk_orders_per_customer,
-    "q06_running_totals": q06_running_totals,
-    "q07_distinct_counts": q07_distinct_counts,
-    "q08_set_ops": q08_set_ops,
-    "q09_parts_sold_semi": q09_parts_sold_semi,
-    "q10_customers_without_orders": q10_customers_without_orders,
-    "q11_json_extract": q11_json_extract,
-    "q12_events_daily": q12_events_daily,
-    "q13_brand_quantity": q13_brand_quantity,
-    "q14_cube_flags": q14_cube_flags,
-    "q15_priority_share": q15_priority_share,
-    "q16_top_suppliers": q16_top_suppliers,
-    "q17_grouping_sets": q17_grouping_sets,
-    "q18_topk_skew_safe": q18_topk_skew_safe,
-    "q19_pivot_status": q19_pivot_status,
-    "q20_percentiles": q20_percentiles,
-    "q21_date_arithmetic": q21_date_arithmetic,
-    "s01_tumbling_event_counts": s01_tumbling_event_counts,
-    "s02_session_windows": s02_session_windows,
-    "q24_small_quantity_revenue": q24_small_quantity_revenue,
-    "q25_trailing_window": q25_trailing_window,
-    "q26_star_join": q26_star_join,
-    "q27_ntile_quartiles": q27_ntile_quartiles,
-    "q28_from_json_struct": q28_from_json_struct,
-    "q29_conditional_aggs": q29_conditional_aggs,
-    "q30_scalar_breadth": q30_scalar_breadth,
-    "q31_priority_exists": q31_priority_exists,
-    "q32_revenue_share": q32_revenue_share,
-    "q33_rich_inactive_customers": q33_rich_inactive_customers,
-    "q34_approx_distinct": q34_approx_distinct,
-    "q35_funnel": q35_funnel,
-    "q36_calendar_gap_fill": q36_calendar_gap_fill,
-    "q37_approx_percentile": q37_approx_percentile,
-}
-
-RELATIONAL_ORACLES = {
-    "q01_pricing_summary": Q01_SQL,
-    "q02_top_orders": Q02_SQL,
-    "q03_segment_revenue": Q03_SQL,
-    "q04_region_nation_rollup": Q04_SQL,
-    "q05_topk_orders_per_customer": Q05_SQL,
-    "q06_running_totals": Q06_SQL,
-    "q07_distinct_counts": Q07_SQL,
-    "q08_set_ops": Q08_SQL,
-    "q09_parts_sold_semi": Q09_SQL,
-    "q10_customers_without_orders": Q10_SQL,
-    "q11_json_extract": Q11_SQL,
-    "q12_events_daily": Q12_SQL,
-    "q13_brand_quantity": Q13_SQL,
-    "q14_cube_flags": Q14_SQL,
-    "q15_priority_share": Q15_SQL,
-    "q16_top_suppliers": Q16_SQL,
-    "q17_grouping_sets": Q17_SQL,
-    "q18_topk_skew_safe": Q18_SQL,
-    "q19_pivot_status": Q19_SQL,
-    "q20_percentiles": Q20_SQL,
-    "q21_date_arithmetic": Q21_SQL,
-    "s01_tumbling_event_counts": S01_SQL,
-    "s02_session_windows": S02_SQL,
-    "q24_small_quantity_revenue": Q24_SQL,
-    "q25_trailing_window": Q25_SQL,
-    "q26_star_join": Q26_SQL,
-    "q27_ntile_quartiles": Q27_SQL,
-    "q28_from_json_struct": Q28_SQL,
-    "q29_conditional_aggs": Q29_SQL,
-    "q30_scalar_breadth": Q30_SQL,
-    "q31_priority_exists": Q31_SQL,
-    "q32_revenue_share": Q32_SQL,
-    "q33_rich_inactive_customers": Q33_SQL,
-    "q34_approx_distinct": Q34_SQL,
-    "q35_funnel": Q35_SQL,
-    "q36_calendar_gap_fill": Q36_SQL,
-    "q37_approx_percentile": Q37_SQL,
+CATALOG = {
+    "q01_pricing_summary": (q01_pricing_summary, Q01_SQL),
+    "q02_top_orders": (q02_top_orders, Q02_SQL),
+    "q03_segment_revenue": (q03_segment_revenue, Q03_SQL),
+    "q04_region_nation_rollup": (q04_region_nation_rollup, Q04_SQL),
+    "q05_topk_orders_per_customer": (q05_topk_orders_per_customer, Q05_SQL),
+    "q06_running_totals": (q06_running_totals, Q06_SQL),
+    "q07_distinct_counts": (q07_distinct_counts, Q07_SQL),
+    "q08_set_ops": (q08_set_ops, Q08_SQL),
+    "q09_parts_sold_semi": (q09_parts_sold_semi, Q09_SQL),
+    "q10_customers_without_orders": (q10_customers_without_orders, Q10_SQL),
+    "q11_json_extract": (q11_json_extract, Q11_SQL),
+    "q12_events_daily": (q12_events_daily, Q12_SQL),
+    "q13_brand_quantity": (q13_brand_quantity, Q13_SQL),
+    "q14_cube_flags": (q14_cube_flags, Q14_SQL),
+    "q15_priority_share": (q15_priority_share, Q15_SQL),
+    "q16_top_suppliers": (q16_top_suppliers, Q16_SQL),
+    "q17_grouping_sets": (q17_grouping_sets, Q17_SQL),
+    "q18_topk_skew_safe": (q18_topk_skew_safe, Q18_SQL),
+    "q19_pivot_status": (q19_pivot_status, Q19_SQL),
+    "q20_percentiles": (q20_percentiles, Q20_SQL),
+    "q21_date_arithmetic": (q21_date_arithmetic, Q21_SQL),
+    "s01_tumbling_event_counts": (s01_tumbling_event_counts, S01_SQL),
+    "s02_session_windows": (s02_session_windows, S02_SQL),
+    "q24_small_quantity_revenue": (q24_small_quantity_revenue, Q24_SQL),
+    "q25_trailing_window": (q25_trailing_window, Q25_SQL),
+    "q26_star_join": (q26_star_join, Q26_SQL),
+    "q27_ntile_quartiles": (q27_ntile_quartiles, Q27_SQL),
+    "q28_from_json_struct": (q28_from_json_struct, Q28_SQL),
+    "q29_conditional_aggs": (q29_conditional_aggs, Q29_SQL),
+    "q30_scalar_breadth": (q30_scalar_breadth, Q30_SQL),
+    "q31_priority_exists": (q31_priority_exists, Q31_SQL),
+    "q32_revenue_share": (q32_revenue_share, Q32_SQL),
+    "q33_rich_inactive_customers": (q33_rich_inactive_customers, Q33_SQL),
+    "q34_approx_distinct": (q34_approx_distinct, Q34_SQL),
+    "q35_funnel": (q35_funnel, Q35_SQL),
+    "q36_calendar_gap_fill": (q36_calendar_gap_fill, Q36_SQL),
+    "q37_approx_percentile": (q37_approx_percentile, Q37_SQL),
 }

@@ -27,13 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import read_table
 
 
 # --- q22: as-of join (purchase ← latest prior view per user) --------------
 def q22_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     ev = read_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", "ts", "event_id", F.lit(0).alias("side")
@@ -92,7 +90,6 @@ FROM carried WHERE side = 1 ORDER BY purchase_id
 
 # --- q23: range join against a generated monthly calendar -----------------
 def q23_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     orders = read_table(spark, sf_dir, "orders")
     # Generated dimension: month starts covering the order range (1995-2001,
     # TESTDATA.md).  Tiny → broadcast; the non-equi join is then a
@@ -135,12 +132,7 @@ GROUP BY month ORDER BY month
 """
 
 
-TEMPORAL_QUERIES = {
-    "q22_asof_join": q22_asof_join,
-    "q23_range_join": q23_range_join,
-}
-
-TEMPORAL_ORACLES = {
-    "q22_asof_join": Q22_SQL,
-    "q23_range_join": Q23_SQL,
+CATALOG = {
+    "q22_asof_join": (q22_asof_join, Q22_SQL),
+    "q23_range_join": (q23_range_join, Q23_SQL),
 }

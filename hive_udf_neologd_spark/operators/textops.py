@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_udf_neologd_spark.functions.tokenize import tokenize_ja
-from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import local_frame, read_table
 from hive_udf_neologd_spark.tokenizer import (
     lemma_parity,
@@ -42,6 +41,7 @@ from hive_udf_neologd_spark.tokenizer.goldens import (
     T18_TOKENS,
     T23_TOKENS,
     T24_TOKENS,
+    t26_values_rows,
     values_rows,
 )
 
@@ -64,7 +64,6 @@ def ensure_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
 
 # --- t01: flagship tokenize → explode → top-k -----------------------------
 def t01_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     tok = tokenize_ja()
     # The tokenizer is the expensive stage — spread it across the cluster
@@ -91,7 +90,6 @@ LIMIT 20
 
 # --- t02: token counting (whitespace + BPE-ish regex) ---------------------
 def t02_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     return (
@@ -143,7 +141,6 @@ def _in_list(vals: tuple[str, ...]) -> str:
 
 
 def t03_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     hits = {
         lang: F.expr(
@@ -193,7 +190,6 @@ def t04_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic document quality: token count, mean token length,
     type-token ratio — combined into a [0,1]-ish score; low-quality docs
     (short or highly repetitive) filtered out."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
@@ -281,7 +277,6 @@ def t05_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     split+md5 projection — a second corpus pass at 100 TB.  The
     checkpoint pins the two-column per-doc result (computed fresh per
     invocation) so the sort samples that instead."""
-    prepare(spark)
     return _t05_fingerprints(spark, sf_dir).localCheckpoint(eager=False).orderBy("doc_id")
 
 
@@ -347,7 +342,6 @@ def t06_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle output (exchange reuse) rather than rescanning.  The corpus
     size N joins in as a broadcast 1-row aggregate (q32 pattern) instead of
     a driver-side ``count()`` — one DAG, no extra full pass at 100 TB."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     tokens = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     tf = tokens.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -397,7 +391,6 @@ ORDER BY doc_id, rnk
 
 # --- t07: bigram extraction -----------------------------------------------
 def t07_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     bigrams = F.expr(
         "transform(sequence(0, size(ts) - 2), i -> concat(ts[i], ' ', ts[i+1]))"
@@ -431,11 +424,8 @@ def sql02_cte_window_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     a CTE + broadcast-join + window-rank query submitted as one SQL
     string over temp views — the way a Hive user of the reference writes
     everything.  Catalyst plans it identically to the DataFrame twin."""
-    from hive_udf_neologd_spark.sources import read_table as _rt
-
-    prepare(spark)
-    _rt(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    _rt(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
+    read_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
     return spark.sql(
         """
         WITH rev AS (
@@ -484,11 +474,9 @@ def sql01_lateral_view_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     that runs unchanged on this engine.  Same oracle as the flagship t01
     (the corpus-equivalence argument)."""
     from hive_udf_neologd_spark.functions.tokenize import register_udfs
-    from hive_udf_neologd_spark.sources import read_table as _rt
 
-    prepare(spark)
     register_udfs(spark)
-    _rt(spark, sf_dir, "documents").createOrReplaceTempView("documents_v")
+    read_table(spark, sf_dir, "documents").createOrReplaceTempView("documents_v")
     return spark.sql(
         """
         SELECT token, COUNT(*) AS n
@@ -514,7 +502,6 @@ def t09_quality_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit ratio, mean word length) a pretraining filter thresholds on
     (Gopher/C4-style heuristics).  All built-in expression work — one
     narrow pass then a tiny per-lang aggregate."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n_tok = F.size(toks)
@@ -587,7 +574,6 @@ def t08_tokenize_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's const arguments), so this is four narrow UDF columns over a
     3-row frame — no shuffle at any scale.  Oracle: T08_SQL replays the
     pinned-lexicon golden constants as a VALUES table (full hash check)."""
-    prepare(spark)
     df = local_frame(
         spark, list(_MODE_SENTENCES), "sentence_id long, text string"
     )
@@ -650,7 +636,6 @@ def t13_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded ~128-document sort, never "one language = one task"; packing
     restarts per shard, which is exactly what a distributed trainer wants
     (shards are independent, re-runnable units)."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     shard = F.expr(f"doc_id DIV {_PACK_SHARD}")  # exact integer division
     w = Window.partitionBy("lang", "shard").orderBy("doc_id")
@@ -701,7 +686,6 @@ def t10_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows, unlike fraction-based sample()).  Pure built-ins, one narrow
     pass + one tiny agg shuffle; identical md5 byte semantics in DuckDB
     makes the assignment itself oracle-checked."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     h = F.expr(
         "pmod(CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT), 100)"
@@ -773,7 +757,6 @@ def t11_zipf_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     per class.  Two aggregations; the second operates on the (tiny)
     distinct-term set — the first shuffle is the only corpus-sized one,
     with map-side partial counts."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     tf = (
         docs.select(F.explode(F.split("text", " ")).alias("term"))
@@ -827,7 +810,6 @@ def t17_tokenize_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     constants under the pinned dictionary (sentence 2 exercises the
     MeCab-CSV snapshot), so the oracle replays them as a VALUES table —
     the t08 pattern."""
-    prepare(spark)
     from hive_udf_neologd_spark.functions.tokenize import tokenize_ja_rich
 
     df = local_frame(spark, list(_RICH_SENTENCES), "sentence_id long, text string")
@@ -871,7 +853,6 @@ def t14_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg.  Both corpus-sized shuffles are keyed on high-cardinality doc_id
     (+token) with map-side partial aggregation — the same shape as t01, no
     skew risk beyond Zipf tokens already absorbed by partial agg."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     per_token = (
         docs.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("token"))
@@ -935,7 +916,6 @@ def t15_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one narrow projection pass (regexp built-ins, whole-stage
     codegen, no Python) + a tiny per-lang aggregate; the injection CASE is
     a stand-in for real text and vanishes in production use."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     injected = F.when(
         F.col("doc_id") % 10 == 0,
@@ -1012,7 +992,6 @@ def t16_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, and the join key is the high-cardinality token (skew from
     Zipf heads handled by AQE skew-join), then per-doc and per-lang aggs.
     No driver-side state: the unigram "model" stays distributed."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents")
     occ = (
         docs.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("token"))
@@ -1089,7 +1068,6 @@ def _throughput_query(mode: str):
     aggregate with map-side partials; no corpus-sized shuffle."""
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        prepare(spark)
         docs = read_table(spark, sf_dir, "documents")
         # Single-file sf fixture → one input split → spread the CPU-bound
         # tokenizer; a production scan with enough splits passes through
@@ -1157,7 +1135,6 @@ def t19_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup (one keyed shuffle), the token-count aggregate (keyed, map-side
     partials), the split projection (free), and the packing window
     (sharded key) into one job; nothing collects, nothing loops."""
-    prepare(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     # 1: exact dedup — survivor = min doc_id per content hash.
     wd = Window.partitionBy(F.md5("text")).orderBy("doc_id")
@@ -1270,7 +1247,6 @@ def t20_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (stratum sizes, final summary) are both low-cardinality
     keys with map-side partial agg — nothing corpus-sized ever shuffles.
     """
-    prepare(spark)
     strat = (
         read_table(spark, sf_dir, "documents")
         .select(
@@ -1335,7 +1311,6 @@ def t21_connection_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant 6-row frame through one narrow UDF projection, no shuffle at
     any scale; oracle replays the pinned sequences from
     tokenizer/goldens.py as a VALUES table (full hash check)."""
-    prepare(spark)
     from hive_udf_neologd_spark.tokenizer.goldens import T21_SENTENCES
 
     df = local_frame(
@@ -1370,7 +1345,6 @@ def t22_segmentation_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine output; same plan).  Oracle replays the recorded aggregates
     (T22_EXPECTED, recapture protocol) as a VALUES table with the same
     IEEE f1 expression — full hash check."""
-    prepare(spark)
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
@@ -1452,7 +1426,6 @@ def _parity_query(axis: Axis):
     module = axis.module
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        prepare(spark)
         from pyspark.sql.functions import pandas_udf
 
         df = local_frame(
@@ -1523,9 +1496,7 @@ def t26_ja_rich_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, and an 8-group map-side aggregate mirrors t18.  Oracle: the
     pinned per-pid stats (goldens.T26_STATS, recapture protocol) joined
     with DuckDB-computed corpus counts — the t23/t24 pattern."""
-    prepare(spark)
     from hive_udf_neologd_spark.functions.tokenize import tokenize_ja_rich
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL
 
     docs = read_table(spark, sf_dir, "documents")
     docs = ensure_parallelism(spark, docs)
@@ -1561,8 +1532,6 @@ def t26_ja_rich_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _t26_sql() -> str:
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL, t26_values_rows
-
     return f"""
 WITH pool(pid, n_tokens_per_doc, n_nouns_per_doc, n_base_per_doc, n_reading_per_doc) AS (VALUES
 {t26_values_rows()}
@@ -1601,9 +1570,7 @@ def sql03_sql_udf_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same shape as t18 — broadcast 8-row pool join, one
     ArrowEvalPython projection, 8-group partial-agg; no corpus shuffle."""
-    prepare(spark)
     from hive_udf_neologd_spark.functions.tokenize import register_udfs
-    from hive_udf_neologd_spark.tokenizer.goldens import T18_POOL
 
     register_udfs(spark)
     docs = read_table(spark, sf_dir, "documents")
@@ -1634,79 +1601,58 @@ FROM toks GROUP BY pid ORDER BY pid
 SQL03_SQL = T18_SQL
 
 
-TEXT_QUERIES = {
-    "t01_token_topk": t01_token_topk,
-    "t02_token_stats": t02_token_stats,
-    "t03_langid": t03_langid,
-    "t04_quality_score": t04_quality_score,
-    "t05_fingerprint_winnow": t05_fingerprint_winnow,
-    "t06_tfidf": t06_tfidf,
-    "t07_bigram_topk": t07_bigram_topk,
-    "t08_tokenize_modes": t08_tokenize_modes,
-    "t09_quality_ratios": t09_quality_ratios,
-    "t10_hash_split": t10_hash_split,
-    "t11_zipf_spectrum": t11_zipf_spectrum,
-    "t12_langid_confusion": t12_langid_confusion,
-    "t13_sequence_packing": t13_sequence_packing,
-    "t14_repetition_quality": t14_repetition_quality,
-    "t15_pii_scrub": t15_pii_scrub,
-    "t16_token_rarity": t16_token_rarity,
-    "t17_tokenize_rich": t17_tokenize_rich,
-    "sql01_lateral_view_tokenize": sql01_lateral_view_tokenize,
-    "sql02_cte_window_sql": sql02_cte_window_sql,
-    # Append-only (DRIVER_GATED_50 contract): new entries go at the END.
-    "t18_ja_tokenize_throughput": _throughput_query("normal"),
-    "t19_training_pipeline": t19_training_pipeline,
-    "t20_stratified_sample": t20_stratified_sample,
-    "t21_connection_matrix": t21_connection_matrix,
-    "t22_segmentation_parity": t22_segmentation_parity,
-    "t23_ja_search_throughput": _throughput_query("search"),
-    "t24_ja_extended_throughput": _throughput_query("extended"),
-    "sql03_sql_udf_throughput": sql03_sql_udf_throughput,
-    "t25_mode_parity": _parity_query(mode_parity.AXIS),
-    "t26_ja_rich_throughput": t26_ja_rich_throughput,
-    "t27_lemma_parity": _parity_query(lemma_parity.AXIS),
-    "t28_reading_parity": _parity_query(reading_parity.AXIS),
-    "t29_userdict_parity": _parity_query(userdict_parity.AXIS),
-    "t30_pos_parity": _parity_query(pos_parity.AXIS),
-}
-
 # t08's oracle is a constant-literal VALUES table (see T08_SQL): DuckDB
 # cannot tokenize Japanese, but t08's outputs are fixed constants under the
 # pinned lexicon, so replaying them gives the driver a full hash check;
 # tests/test_tokenizer.py carries the same exact-token goldens.
-TEXT_ORACLES = {
-    "t01_token_topk": T01_SQL,
-    "t02_token_stats": T02_SQL,
-    "t03_langid": T03_SQL,
-    "t04_quality_score": T04_SQL,
-    "t05_fingerprint_winnow": T05_SQL,
-    "t06_tfidf": T06_SQL,
-    "t07_bigram_topk": T07_SQL,
-    "t08_tokenize_modes": T08_SQL,
-    "t09_quality_ratios": T09_SQL,
-    "t10_hash_split": T10_SQL,
-    "t11_zipf_spectrum": T11_SQL,
-    "t12_langid_confusion": T12_SQL,
-    "t13_sequence_packing": T13_SQL,
-    "t14_repetition_quality": T14_SQL,
-    "t15_pii_scrub": T15_SQL,
-    "t16_token_rarity": T16_SQL,
-    "t17_tokenize_rich": T17_SQL,
-    "sql01_lateral_view_tokenize": SQL01_SQL,
-    "sql02_cte_window_sql": SQL02_SQL,
-    "t18_ja_tokenize_throughput": T18_SQL,
-    "t19_training_pipeline": T19_SQL,
-    "t20_stratified_sample": T20_SQL,
-    "t21_connection_matrix": T21_SQL,
-    "t22_segmentation_parity": T22_SQL,
-    "t23_ja_search_throughput": _throughput_sql(T23_TOKENS),
-    "t24_ja_extended_throughput": _throughput_sql(T24_TOKENS),
-    "sql03_sql_udf_throughput": SQL03_SQL,
-    "t25_mode_parity": values_sql(mode_parity.AXIS),
-    "t26_ja_rich_throughput": T26_SQL,
-    "t27_lemma_parity": values_sql(lemma_parity.AXIS),
-    "t28_reading_parity": values_sql(reading_parity.AXIS),
-    "t29_userdict_parity": values_sql(userdict_parity.AXIS),
-    "t30_pos_parity": values_sql(pos_parity.AXIS),
+CATALOG = {
+    "t01_token_topk": (t01_token_topk, T01_SQL),
+    "t02_token_stats": (t02_token_stats, T02_SQL),
+    "t03_langid": (t03_langid, T03_SQL),
+    "t04_quality_score": (t04_quality_score, T04_SQL),
+    "t05_fingerprint_winnow": (t05_fingerprint_winnow, T05_SQL),
+    "t06_tfidf": (t06_tfidf, T06_SQL),
+    "t07_bigram_topk": (t07_bigram_topk, T07_SQL),
+    "t08_tokenize_modes": (t08_tokenize_modes, T08_SQL),
+    "t09_quality_ratios": (t09_quality_ratios, T09_SQL),
+    "t10_hash_split": (t10_hash_split, T10_SQL),
+    "t11_zipf_spectrum": (t11_zipf_spectrum, T11_SQL),
+    "t12_langid_confusion": (t12_langid_confusion, T12_SQL),
+    "t13_sequence_packing": (t13_sequence_packing, T13_SQL),
+    "t14_repetition_quality": (t14_repetition_quality, T14_SQL),
+    "t15_pii_scrub": (t15_pii_scrub, T15_SQL),
+    "t16_token_rarity": (t16_token_rarity, T16_SQL),
+    "t17_tokenize_rich": (t17_tokenize_rich, T17_SQL),
+    "sql01_lateral_view_tokenize": (sql01_lateral_view_tokenize, SQL01_SQL),
+    "sql02_cte_window_sql": (sql02_cte_window_sql, SQL02_SQL),
+    # Append-only (DRIVER_GATED_50 contract): new entries go at the END.
+    "t18_ja_tokenize_throughput": (_throughput_query("normal"), T18_SQL),
+    "t19_training_pipeline": (t19_training_pipeline, T19_SQL),
+    "t20_stratified_sample": (t20_stratified_sample, T20_SQL),
+    "t21_connection_matrix": (t21_connection_matrix, T21_SQL),
+    "t22_segmentation_parity": (t22_segmentation_parity, T22_SQL),
+    "t23_ja_search_throughput": (
+        _throughput_query("search"),
+        _throughput_sql(T23_TOKENS),
+    ),
+    "t24_ja_extended_throughput": (
+        _throughput_query("extended"),
+        _throughput_sql(T24_TOKENS),
+    ),
+    "sql03_sql_udf_throughput": (sql03_sql_udf_throughput, SQL03_SQL),
+    "t25_mode_parity": (_parity_query(mode_parity.AXIS), values_sql(mode_parity.AXIS)),
+    "t26_ja_rich_throughput": (t26_ja_rich_throughput, T26_SQL),
+    "t27_lemma_parity": (
+        _parity_query(lemma_parity.AXIS),
+        values_sql(lemma_parity.AXIS),
+    ),
+    "t28_reading_parity": (
+        _parity_query(reading_parity.AXIS),
+        values_sql(reading_parity.AXIS),
+    ),
+    "t29_userdict_parity": (
+        _parity_query(userdict_parity.AXIS),
+        values_sql(userdict_parity.AXIS),
+    ),
+    "t30_pos_parity": (_parity_query(pos_parity.AXIS), values_sql(pos_parity.AXIS)),
 }

@@ -52,8 +52,11 @@ def get_spark(app_name: str = "hive-udf-neologd-spark", cpus: int | None = None)
 def prepare(spark: SparkSession) -> SparkSession:
     """Idempotently apply the session confs this engine's queries rely on.
 
-    Used by query builders that receive an externally-created session (the
-    driver's harness) — timestamps must render in UTC for oracle parity.
+    Two callers: the catalog, which runs it before every ``QUERIES[name]``
+    build, so a session created elsewhere (the driver's harness) gets these
+    confs and timestamps render in UTC for oracle parity; and
+    ``sources.read_table``, whose timestamp normalization needs UTC even
+    when it is called outside the catalog.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -21,8 +21,8 @@ import os
 import shutil
 
 # Floor for choosing /dev/shm.  io03–io05 plus s03–s11 run once in one
-# process at sf0.1 leave 36 MB in 565 entries — 2.0x the source parquet
-# bytes, 13% of the floor.
+# process at sf0.1 leave 24 MB in 538 entries — 1.4x the source parquet
+# bytes, 9% of the floor.
 MIN_FREE_BYTES = 256 << 20
 _BASES = ("/dev/shm", "/tmp")  # preference order; the last is the fallback
 

@@ -29,7 +29,6 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_udf_neologd_spark.session import prepare
 from hive_udf_neologd_spark.sources import read_table, scratch
 from hive_udf_neologd_spark.streaming.term_counts import (
     read_document_stream,
@@ -92,25 +91,30 @@ def _stream_shuffle_scope(spark: SparkSession, stage: str):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _staged_events(spark: SparkSession, sf_dir: str, doubled: bool = False) -> str:
+    """``events`` staged once per process as 4 parquet files (4 source
+    splits), written through read_table so the nanos→micros timestamp
+    normalization matches the batch path.  ``doubled`` stages every event
+    twice, the duplicate-laden input s06 and s10 deduplicate."""
+
+    def write(path: str) -> None:
+        ev = read_table(spark, sf_dir, "events")
+        if doubled:
+            ev = ev.unionByName(ev)
+        ev.coalesce(4).write.mode("overwrite").parquet(path)
+
+    name = "events_x2" if doubled else "events"
+    return scratch.stage_once(sf_dir, name, "events", write)
+
+
 def s03_streaming_event_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
-    # Stage through read_table so the nanos→micros timestamp normalization
-    # matches the batch path; multiple files → multiple source splits.
-    stage = scratch.stage_once(
-        sf_dir,
-        "events",
-        "events",
-        lambda p: read_table(spark, sf_dir, "events")
-        .coalesce(4)
-        .write.mode("overwrite")
-        .parquet(p),
-    )
+    stage = _staged_events(spark, sf_dir)
     out = streaming_event_counts(
         read_event_stream(spark, stage), window="1 hour", watermark="2 hours"
     )
-    name = _run_append(out, "s03_sink", stage=stage)
+    q = _run_append(out, "s03_sink", stage=stage)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             F.unix_timestamp("window_start").alias("window_start"),
             "event_type",
@@ -143,7 +147,6 @@ def s04_streaming_term_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     under a 2-hour watermark in append mode.  The oracle tokenizes via
     ``string_split`` (exact on this corpus — t01's equivalence argument)
     and applies the same watermark cutoff as s03."""
-    prepare(spark)
     stage = scratch.stage_once(
         sf_dir,
         "documents",
@@ -162,9 +165,9 @@ def s04_streaming_term_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     out = streaming_term_counts(
         read_document_stream(spark, stage), window="1 hour", watermark="2 hours"
     )
-    name = _run_append(out, "s04_sink", stage=stage)
+    q = _run_append(out, "s04_sink", stage=stage)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(F.unix_timestamp("window_start").alias("window_start"), "token", "n")
         .orderBy("window_start", "token")
     )
@@ -193,16 +196,12 @@ ORDER BY window_start, token
 """
 
 
-def _run_append(
-    out,
-    name_prefix: str,
-    mode: str = "append",
-    want_query: bool = False,
-    stage: str | None = None,
-):
+def _run_append(out, name_prefix: str, stage: str, mode: str = "append"):
+    """Drain ``out`` into a memory sink under the partition count derived
+    from ``stage``; returns the finished query, whose ``name`` is the
+    sink's table."""
     name = f"{name_prefix}_{next(_RUN_IDS)}"
-
-    def _start():
+    with _stream_shuffle_scope(out.sparkSession, stage):
         q = (
             out.writeStream.format("memory")
             .queryName(name)
@@ -212,16 +211,7 @@ def _run_append(
             .start()
         )
         q.awaitTermination(300)
-        return q
-
-    if stage is not None:
-        with _stream_shuffle_scope(out.sparkSession, stage):
-            q = _start()
-    else:
-        q = _start()
-    if want_query:
-        return name, q
-    return name
+    return q
 
 
 def s05_stream_static_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,11 +220,7 @@ def s05_stream_static_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the join), then watermarked windowed revenue per market segment.
     The canonical streaming-enrichment shape at 100 TB: dimensions stay
     batch tables, only the windowed aggregate keeps state."""
-    prepare(spark)
-    from hive_udf_neologd_spark.streaming.term_counts import read_event_stream
-
-    stage = scratch.fresh(sf_dir, "events_s05")
-    read_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(stage)
+    stage = _staged_events(spark, sf_dir)
     cust = F.broadcast(
         read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
@@ -246,9 +232,9 @@ def s05_stream_static_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("ws"), "c_mktsegment", "n", "total_value")
     )
-    name = _run_append(out, "s05_sink", stage=stage)
+    q = _run_append(out, "s05_sink", stage=stage)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             F.unix_timestamp("ws").alias("window_start"), "c_mktsegment", "n", "total_value"
         )
@@ -281,20 +267,15 @@ def s06_streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the genuinely bounded streaming analog of d01's batch hash-dedup.
     Duplicates here share an identical ts, so they always land inside the
     watermark window and the oracle is plain DISTINCT."""
-    prepare(spark)
-    from hive_udf_neologd_spark.streaming.term_counts import read_event_stream
-
-    ev = read_table(spark, sf_dir, "events")
-    stage = scratch.fresh(sf_dir, "events_s06")
-    ev.unionByName(ev).coalesce(4).write.mode("overwrite").parquet(stage)
+    stage = _staged_events(spark, sf_dir, doubled=True)
     out = (
         read_event_stream(spark, stage)
         .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    name = _run_append(out, "s06_sink", stage=stage)
-    return spark.table(name).orderBy("event_id")
+    q = _run_append(out, "s06_sink", stage=stage)
+    return spark.table(q.name).orderBy("event_id")
 
 
 S06_SQL = """
@@ -310,7 +291,6 @@ def s07_stateful_running_totals_e2e(spark: SparkSession, sf_dir: str) -> DataFra
     transitions.  Update mode appends one row per (user, batch); the final
     state per user is the row with the highest running count (strictly
     monotone), which must equal the plain batch aggregate — the oracle."""
-    prepare(spark)
     from pyspark.sql import Window
 
     from hive_udf_neologd_spark.streaming.term_counts import (
@@ -318,19 +298,18 @@ def s07_stateful_running_totals_e2e(spark: SparkSession, sf_dir: str) -> DataFra
         streaming_user_running_totals,
     )
 
-    stage = scratch.fresh(sf_dir, "events_s07")
-    read_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(stage)
+    stage = _staged_events(spark, sf_dir)
     src = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    name = _run_append(
+    q = _run_append(
         streaming_user_running_totals(src), "s07_sink", mode="update", stage=stage
     )
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        spark.table(name)
+        spark.table(q.name)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("user_id", "n_events", "total_value")
@@ -354,9 +333,7 @@ def s08_stream_stream_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join.  Scale: state is per-user and time-bounded; the join
     shuffles both streams once on user_id.  Epochs via unix_timestamp /
     floor(epoch(...)) — both truncate the sub-second part identically."""
-    prepare(spark)
-    stage = scratch.fresh(sf_dir, "events_s08")
-    read_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(stage)
+    stage = _staged_events(spark, sf_dir)
     views = (
         read_event_stream(spark, stage)
         .filter(F.col("event_type") == "view")
@@ -395,8 +372,8 @@ def s08_stream_stream_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("value", 2).alias("purchase_value"),
         )
     )
-    name = _run_append(out, "s08_sink", stage=stage)
-    return spark.table(name).orderBy("view_id", "purchase_id")
+    q = _run_append(out, "s08_sink", stage=stage)
+    return spark.table(q.name).orderBy("view_id", "purchase_id")
 
 
 S08_SQL = """
@@ -420,9 +397,7 @@ def s09_sliding_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the window start set is {bucket(ts), bucket(ts) - slide}) and applies
     the same cutoff.  Scale: state is windows×keys, 2× tumbling for
     overlap 2 — still watermark-bounded."""
-    prepare(spark)
-    stage = scratch.fresh(sf_dir, "events_s09")
-    read_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(stage)
+    stage = _staged_events(spark, sf_dir)
     out = (
         read_event_stream(spark, stage)
         .withWatermark("ts", "2 hours")
@@ -430,9 +405,9 @@ def s09_sliding_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("ws"), "event_type", "n", "total_value")
     )
-    name = _run_append(out, "s09_sink", stage=stage)
+    q = _run_append(out, "s09_sink", stage=stage)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(F.unix_timestamp("ws").alias("window_start"), "event_type", "n", "total_value")
         .orderBy("window_start", "event_type")
     )
@@ -467,12 +442,9 @@ def s10_foreachbatch_merge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup, not single-batch).  The final target equals DISTINCT events —
     the oracle.  At 100 TB the target side is a bucketed hash index on the
     key, making each micro-batch merge a co-located anti join."""
-    prepare(spark)
     from hive_udf_neologd_spark.streaming.term_counts import EVENT_SCHEMA
 
-    ev = read_table(spark, sf_dir, "events")
-    stage = scratch.fresh(sf_dir, "events_s10")
-    ev.unionByName(ev).coalesce(4).write.mode("overwrite").parquet(stage)
+    stage = _staged_events(spark, sf_dir, doubled=True)
     target = scratch.fresh(sf_dir, "s10_target")
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -543,7 +515,6 @@ def s11_late_data_drop_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical plan shape to s03 — watermark bounds the window
     state store; the staging/mtime choreography is test fixture, not part
     of the streaming plan."""
-    prepare(spark)
     from hive_udf_neologd_spark.streaming.term_counts import EVENT_SCHEMA
 
     events = read_table(spark, sf_dir, "events")
@@ -583,7 +554,7 @@ def s11_late_data_drop_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(stage)
     )
     out = streaming_event_counts(src, window="1 hour", watermark="2 hours")
-    name, q = _run_append(out, "s11_sink", want_query=True, stage=stage)
+    q = _run_append(out, "s11_sink", stage=stage)
     # The deterministic drop above relies on the empirically-verified
     # one-batch watermark lag (see docstring).  Guard the assumption
     # loudly: after the final batch the reported watermark must be exactly
@@ -607,7 +578,7 @@ def s11_late_data_drop_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "longer holds on this Spark version"
         )
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             F.unix_timestamp("window_start").alias("window_start"),
             "event_type",
@@ -623,26 +594,14 @@ def s11_late_data_drop_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 S11_SQL = S03_SQL
 
 
-STREAMING_QUERIES = {
-    "s03_streaming_event_counts_e2e": s03_streaming_event_counts_e2e,
-    "s04_streaming_term_counts_e2e": s04_streaming_term_counts_e2e,
-    "s05_stream_static_join_e2e": s05_stream_static_join_e2e,
-    "s06_streaming_dedup_e2e": s06_streaming_dedup_e2e,
-    "s07_stateful_running_totals_e2e": s07_stateful_running_totals_e2e,
-    "s08_stream_stream_join_e2e": s08_stream_stream_join_e2e,
-    "s09_sliding_window_e2e": s09_sliding_window_e2e,
-    "s10_foreachbatch_merge_e2e": s10_foreachbatch_merge_e2e,
-    "s11_late_data_drop_e2e": s11_late_data_drop_e2e,
-}
-
-STREAMING_ORACLES = {
-    "s03_streaming_event_counts_e2e": S03_SQL,
-    "s04_streaming_term_counts_e2e": S04_SQL,
-    "s05_stream_static_join_e2e": S05_SQL,
-    "s06_streaming_dedup_e2e": S06_SQL,
-    "s07_stateful_running_totals_e2e": S07_SQL,
-    "s08_stream_stream_join_e2e": S08_SQL,
-    "s09_sliding_window_e2e": S09_SQL,
-    "s10_foreachbatch_merge_e2e": S10_SQL,
-    "s11_late_data_drop_e2e": S11_SQL,
+CATALOG = {
+    "s03_streaming_event_counts_e2e": (s03_streaming_event_counts_e2e, S03_SQL),
+    "s04_streaming_term_counts_e2e": (s04_streaming_term_counts_e2e, S04_SQL),
+    "s05_stream_static_join_e2e": (s05_stream_static_join_e2e, S05_SQL),
+    "s06_streaming_dedup_e2e": (s06_streaming_dedup_e2e, S06_SQL),
+    "s07_stateful_running_totals_e2e": (s07_stateful_running_totals_e2e, S07_SQL),
+    "s08_stream_stream_join_e2e": (s08_stream_stream_join_e2e, S08_SQL),
+    "s09_sliding_window_e2e": (s09_sliding_window_e2e, S09_SQL),
+    "s10_foreachbatch_merge_e2e": (s10_foreachbatch_merge_e2e, S10_SQL),
+    "s11_late_data_drop_e2e": (s11_late_data_drop_e2e, S11_SQL),
 }

@@ -94,6 +94,61 @@ def test_u01_rounds_ties_like_sql(spark, tmp_path):
     pd.testing.assert_frame_equal(_canon(sdf), _canon(ddf))
 
 
+def test_catalog_prepares_external_session(spark):
+    """A catalog build prepares the session it is handed: confs an outside
+    caller left behind read back as the engine's after building t21, which
+    reads no table, so read_table's own prepare cannot stand in."""
+    foreign = {
+        "spark.sql.session.timeZone": "America/New_York",
+        "spark.sql.shuffle.partitions": "200",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    before = {key: spark.conf.get(key) for key in foreign}
+    try:
+        for key, value in foreign.items():
+            spark.conf.set(key, value)
+        QUERIES["t21_connection_matrix"](spark, SF_DIR)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+            spark.sparkContext.defaultParallelism
+        )
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        for key, value in before.items():
+            spark.conf.set(key, value)
+
+
+def test_only_catalog_prepares_builders():
+    """The catalog is the one place a build prepares the session: no tier
+    module calls ``prepare``, and every tier registers its names in
+    exactly one dict, ``CATALOG`` (name → (builder, oracle SQL))."""
+    import ast
+    from pathlib import Path
+
+    package = Path(__file__).resolve().parent.parent / "hive_udf_neologd_spark"
+    names = set(QUERIES)
+    registries = {}
+    for path in [*package.glob("operators/*.py"), *package.glob("streaming/*.py")]:
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        calls = [
+            node.lineno
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and "prepare" in (getattr(node.func, "id", None), getattr(node.func, "attr", None))
+        ]
+        assert calls == [], f"{path.name} calls prepare at lines {calls}"
+        for node in tree.body:
+            if not (isinstance(node, ast.Assign) and isinstance(node.value, ast.Dict)):
+                continue
+            keys = [k.value for k in node.value.keys if isinstance(k, ast.Constant)]
+            if keys and set(keys) <= names:
+                registries.setdefault(path.stem, []).extend(t.id for t in node.targets)
+    tiers = (
+        "relational temporal textops dedup ann multimodal io pandas_ops e2e"
+    ).split()
+    assert registries == {tier: ["CATALOG"] for tier in tiers}
+
+
 # Top-level names kept although nothing references them, each with its reason.
 _UNREFERENCED_ALLOWED = {
     # The reference UDF's 10 s connect bound.  urllib has one timeout for

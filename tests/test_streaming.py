@@ -111,3 +111,19 @@ def test_stateful_running_totals(spark, event_dir):
             spark.sql("select * from running").collect()}
     assert rows[1] == (3, 6.0)
     assert rows[2] == (2, 9.0)
+
+
+def test_event_streams_share_one_stage(spark, sf_dir):
+    """s03 and s05 stream the same staged ``events`` copy: building both
+    leaves one ``events`` stage under the scratch root and no per-call
+    ``events_s05_*`` copy."""
+    import os
+
+    from hive_udf_neologd_spark.catalog import QUERIES
+    from hive_udf_neologd_spark.sources import scratch
+
+    QUERIES["s03_streaming_event_counts_e2e"](spark, sf_dir)
+    QUERIES["s05_stream_static_join_e2e"](spark, sf_dir)
+    stages = os.listdir(os.path.join(scratch.root(), os.path.basename(sf_dir)))
+    assert stages.count("events") == 1
+    assert [s for s in stages if s.startswith("events_s05_")] == []
